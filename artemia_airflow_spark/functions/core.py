@@ -9,6 +9,10 @@ Spark AND matches the DuckDB oracle computing the same way.
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Callable
+from typing import Any
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -85,6 +89,59 @@ def spread_for_compute(df, min_partitions: int | None = None):
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def spark_thread(target: Callable, *args, name: str | None = None) -> threading.Thread:
+    """An unstarted daemon thread whose ``target`` starts with the Spark
+    local properties (job group, scheduler pool, description) of the
+    thread that starts it.  PySpark's pinned-thread mode gives each
+    Python thread a fresh JVM thread, so a plain thread's jobs carry no
+    job group and a caller's group cancel (stage deadline, streaming
+    ``stop()``) misses them.  A plain thread when no SparkContext is
+    active, where ``InheritableThread`` would assert.  Not for
+    long-lived threads serving many callers."""
+    from pyspark import InheritableThread, SparkContext
+
+    cls = (
+        threading.Thread if SparkContext._active_spark_context is None
+        else InheritableThread
+    )
+    return cls(target=target, args=args, name=name, daemon=True)
+
+
+def overlap(*thunks: Callable[[], Any], workers: int | None = None) -> list:
+    """Run independent driver-side job chains on :func:`spark_thread`
+    threads, at most ``workers`` at once (default: all), and return
+    their results in argument order.  Every thunk runs to completion;
+    the first error in argument order is re-raised after all threads
+    finish, so no chain outlives the call."""
+    results: list[Any] = [None] * len(thunks)
+    errors: list[BaseException | None] = [None] * len(thunks)
+    todo = iter(enumerate(thunks))
+    lock = threading.Lock()
+
+    def drain() -> None:
+        while True:
+            with lock:
+                i, thunk = next(todo, (None, None))
+            if thunk is None:
+                return
+            try:
+                results[i] = thunk()
+            except BaseException as exc:  # noqa: BLE001 — re-raised below
+                errors[i] = exc
+
+    threads = [
+        spark_thread(drain) for _ in range(min(workers or len(thunks), len(thunks)))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for exc in errors:
+        if exc is not None:
+            raise exc
+    return results
 
 
 def epoch_seconds(col: Column | str) -> Column:

@@ -20,6 +20,7 @@ from artemia_airflow_spark.catalog import scan
 from artemia_airflow_spark.functions.core import (
     guarded_e6_ratio,
     lehmer_bucket,
+    overlap,
     spread_for_compute,
 )
 from artemia_airflow_spark.plans.registry import declared
@@ -80,13 +81,22 @@ def decontaminate(
     guide-§2.6 overlap seam used by :func:`corpus_survivors`); with it
     ``eval_df`` is not consumed.  Values are identical either way.
 
-    Returns ``train`` plus a boolean ``contaminated`` column.
+    Returns ``train`` plus a boolean ``contaminated`` column; a
+    supplied ``eval_grams`` whose schema is not exactly one string
+    column ``gram`` raises ``ValueError`` (a schema check, no job).
     """
     if eval_grams is None:
         eval_grams = (
             eval_df.select(
                 F.explode(word_ngrams(text_col, n)).alias("gram")
             ).distinct()
+        )
+    elif [(f.name, f.dataType.simpleString()) for f in eval_grams.schema] != [
+        ("gram", "string")
+    ]:
+        raise ValueError(
+            "eval_grams must be exactly one string column 'gram', got "
+            f"{eval_grams.schema.simpleString()}"
         )
     hits = (
         spread_for_compute(train)
@@ -2553,8 +2563,6 @@ def corpus_survivors(
     from artemia_airflow_spark.operators.selection import classifier_scores
     from artemia_airflow_spark.operators.text import language_id
 
-    from concurrent.futures import ThreadPoolExecutor
-
     _stage = stage_fn(audit)
     # spread the single fact scan before the regex/tokenize front
     # stages (r17, guide §2.5): a local single-file scan arrives as
@@ -2586,10 +2594,8 @@ def corpus_survivors(
                 ev_grams.sparkSession._jvm.org.apache.spark.sql.execution
                 .ExplainMode.fromString("extended")),
         ))
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut_grams = pool.submit(
-            lambda df=ev_grams: df.localCheckpoint(eager=True)
-        )
+
+    def train_chain() -> DataFrame:
         # filter AFTER the stage materialization (r17): a filter on
         # lang_pred substitutes the whole scrub+argmax-of-structs chain
         # into the pushed predicate, which evaluates interpreted next to
@@ -2617,8 +2623,11 @@ def corpus_survivors(
         )
         s_ex = _stage(exact_dedup(s_cls, text_col, id_col), "exact-dedup")
         dups = minhash_portable_duplicates(s_ex, text_col, id_col)
-        s_near = _stage(s_ex.join(dups, id_col, "left_anti"), "near-dedup")
-        grams = fut_grams.result()
+        return _stage(s_ex.join(dups, id_col, "left_anti"), "near-dedup")
+
+    grams, s_near = overlap(
+        lambda: ev_grams.localCheckpoint(eager=True), train_chain
+    )
     return _stage(
         decontaminate(
             s_near, ev, text_col, id_col, n=n_dec, eval_grams=grams

@@ -1141,6 +1141,10 @@ def semantic_dedup(
     # again — without the cut the scan + cast + array_to_vector chain
     # runs maxIter+1 times.  fit() is already eager at this seam (the
     # operator trains at construction), so an eager cut adds no job.
+    # The store holds every input column plus ``__v``, so each embedding
+    # sits in executor storage TWICE (array + vector) until the
+    # caller's action completes; checkpointing only (id, __v) would
+    # halve that at the cost of a join back to the original columns.
     with_vec = with_vec.localCheckpoint(eager=True)
     km = KMeans(
         k=n_cells, seed=seed, maxIter=8, featuresCol="__v", predictionCol="__cell"
@@ -2108,8 +2112,12 @@ def cross_source_matrix(
     guard (the fuzzy_join raise_error precedent) instead of silently
     running a 10-billion-pair join: run exact dedup (B40) upstream
     first — residual near-dup multiplicity in a deduped corpus is
-    small — or raise ``max_bucket`` deliberately.
+    small — or raise ``max_bucket`` deliberately.  ``max_bucket`` < 2
+    is rejected at entry: every pairable bucket holds two docs, so the
+    singleton filter below would otherwise drop the guard silently.
     """
+    if max_bucket < 2:
+        raise ValueError(f"max_bucket must be >= 2, got {max_bucket}")
     banded = _minhash_portable_bands(df, text_col, id_col)
     wb = Window.partitionBy("b", "bv")
     banded = banded.withColumn("__bn", F.count(F.lit(1)).over(wb))
@@ -2134,9 +2142,10 @@ def cross_source_matrix(
     # guide §2.3 "shuffle fewer bytes"): the checkpointed relation,
     # the broadcast build, and both self-join sides shrink from
     # bands x corpus rows to only the rows that can actually pair.
-    # Oversized buckets pass this filter (max_bucket >= 2), so the
-    # in-plan guard still fires on materialization, and the pair set
-    # is unchanged (a singleton contributes no (d1 < d2) row).
+    # Oversized buckets pass this filter (max_bucket >= 2, checked at
+    # entry), so the in-plan guard still fires on materialization, and
+    # the pair set is unchanged (a singleton contributes no (d1 < d2)
+    # row).
     banded = banded.filter(F.col("__bn") >= 2).drop("__bn")
     # materialize the banded relation once (r17b, guide §3.3/§5): BOTH
     # sides of the bucket self-join consume it, and runtime exchange

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from artemia_airflow_spark.catalog import scan
-from artemia_airflow_spark.functions.core import guarded_e6_ratio
+from artemia_airflow_spark.functions.core import guarded_e6_ratio, overlap
 from artemia_airflow_spark.functions.vectors import cosine_similarity
 from artemia_airflow_spark.plans.registry import declared
 from artemia_airflow_spark.session import ensure_engine_conf
@@ -2578,19 +2578,14 @@ def q_index_upsert_portable(spark, sf_dir):
     # broadcast model), so building them on two driver threads lets
     # the encode back-fill the cores the create's tail leaves idle;
     # the MERGE itself still runs strictly after both.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_t = pool.submit(
-            TxTable.create, spark, initial, root, key_col="k"
-        )
-        fut_ch = pool.submit(
-            index_upsert_changes, incr, cells, books, model=model,
+    t, ch = overlap(
+        lambda: TxTable.create(spark, initial, root, key_col="k"),
+        lambda: index_upsert_changes(
+            incr, cells, books, model=model,
             delete_ids=comps.filter(F.col("vec_id") < 5)
             .select("vec_id").distinct(),
-        )
-        t = fut_t.result()
-        ch = fut_ch.result()
+        ),
+    )
     index_upsert(t, None, cells, books, changes=ch)
     loaded = t.snapshot().select("vec_id", "cell", "j", "code")
     return _ivf_pq_portable_query(comps, probe, cells, books, loaded)
@@ -2791,13 +2786,9 @@ def stream_index_maintenance(
         # per table and does not depend on commit order), so overlap
         # them (guide §2.6): the index chain's encode/probe/write
         # back-fills the cores the corpus MERGE's straggler tail leaves
-        # idle instead of waiting for it.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futures = [pool.submit(commit_corpus), pool.submit(commit_index)]
-            for fut in futures:
-                fut.result()
+        # idle instead of waiting for it.  Both commit threads inherit
+        # the stream's job group, so ``q.stop()`` cancels their jobs too.
+        overlap(commit_corpus, commit_index)
 
     q = (
         stream_df.writeStream.foreachBatch(commit_batch)
@@ -2901,22 +2892,16 @@ def q_index_stream_portable(spark, sf_dir):
     # the writes from truth/emb; no chain reads another's output) —
     # overlap them (guide §2.6) instead of paying five sequential
     # fixed-overhead jobs.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        fut_corpus = pool.submit(create_corpus)
-        fut_index = pool.submit(create_index)
-        fut_writes = [
-            pool.submit(
-                lambda df=df, name=name: df.coalesce(1)
-                .write.parquet(os.path.join(src, name))
-            )
+    corpus_t, index_t, *_ = overlap(
+        create_corpus,
+        create_index,
+        *(
+            lambda df=df, name=name: df.coalesce(1)
+            .write.parquet(os.path.join(src, name))
             for df, name in change_files
-        ]
-        corpus_t = fut_corpus.result()
-        index_t = fut_index.result()
-        for fut in fut_writes:
-            fut.result()
+        ),
+        workers=3,
+    )
 
     ch_schema = corrections.schema
     stream = (

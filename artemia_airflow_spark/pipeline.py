@@ -25,6 +25,7 @@ reference's fan-out at dags/update_tr_from_ex_dag.py:154.
 
 from __future__ import annotations
 
+import functools
 import threading
 import time
 import warnings
@@ -33,6 +34,8 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import SparkSession
+
+from artemia_airflow_spark.functions.core import overlap, spark_thread
 
 # ---------------------------------------------------------------------------
 # Retry policy (A8)
@@ -607,7 +610,9 @@ class Triggerer:
             # so this check cannot race a dying thread into a
             # never-polled registration (r10 review #1): either we see
             # _thread set (the loop will re-read _waiting before
-            # exiting) or None (we start a fresh one)
+            # exiting) or None (we start a fresh one).  A plain thread,
+            # not spark_thread: the loop serves many runs, so it must
+            # not inherit one run's Spark job group.
             if self._thread is None:
                 self._thread = threading.Thread(
                     target=self._loop, name="triggerer", daemon=True
@@ -852,52 +857,35 @@ def mapped_stage(
         items = list(over(ctx))
         values: list[Any] = [None] * len(items)
         errors: dict[int, BaseException] = {}
-        lock = threading.Lock()
-        idx_iter = iter(range(len(items)))
 
-        def worker() -> None:
-            while True:
-                with lock:
-                    i = next(idx_iter, None)
-                if i is None:
+        def run_item(i: int) -> None:
+            delays = [0.0, *policy.delays()]
+            for attempt, delay in enumerate(delays, start=1):
+                if delay:
+                    sleep(delay)
+                try:
+                    values[i] = fn(ctx, items[i])
                     return
-                delays = [0.0, *policy.delays()]
-                last: BaseException | None = None
-                for attempt, delay in enumerate(delays, start=1):
-                    if delay:
-                        sleep(delay)
-                    try:
-                        v = fn(ctx, items[i])
-                        with lock:
-                            values[i] = v
-                        last = None
-                        break
-                    except BaseException as exc:  # noqa: BLE001 — even
-                        # SystemExit from an item must be RECORDED, not
-                        # silently kill the worker leaving values[i]=None
-                        # and a 'successful' stage with corrupted XCom
-                        last = exc
-                        # on_retry fires PER MAPPED ITEM (Airflow: each
-                        # mapped task instance has its own callbacks),
-                        # after each failed attempt that will retry —
-                        # same exception isolation as the Stage path
-                        if attempt < len(delays) and on_retry is not None:
-                            try:
-                                on_retry(f"{task_id}[{i}]", attempt, exc)
-                            except Exception:  # noqa: BLE001
-                                pass  # a broken callback never changes retries
-                if last is not None:
-                    with lock:
-                        errors[i] = last
+                except BaseException as exc:  # noqa: BLE001 — even
+                    # SystemExit from an item must be RECORDED, not
+                    # silently kill the worker leaving values[i]=None
+                    # and a 'successful' stage with corrupted XCom
+                    if attempt == len(delays):
+                        errors[i] = exc
+                    # on_retry fires PER MAPPED ITEM (Airflow: each
+                    # mapped task instance has its own callbacks),
+                    # after each failed attempt that will retry —
+                    # same exception isolation as the Stage path
+                    elif on_retry is not None:
+                        try:
+                            on_retry(f"{task_id}[{i}]", attempt, exc)
+                        except Exception:  # noqa: BLE001
+                            pass  # a broken callback never changes retries
 
-        threads = [
-            threading.Thread(target=worker, daemon=True)
-            for _ in range(max(1, min(max_parallel, len(items) or 1)))
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
+        overlap(
+            *(functools.partial(run_item, i) for i in range(len(items))),
+            workers=max(1, max_parallel),
+        )
         if errors:
             raise MappedItemsFailed(task_id, errors, n_items=len(items))
         return values
@@ -1234,7 +1222,8 @@ class Pipeline:
         #1, r10).  The attempt runs on a daemon thread that first tags
         itself with a unique Spark job group (interruptOnCancel=True;
         pinned-thread mode maps the Python thread to one JVM thread,
-        so the group covers exactly this attempt's jobs); on deadline
+        so the group covers exactly this attempt's jobs, including
+        those its ``overlap`` side threads submit); on deadline
         the group is cancelled (AndFutureJobs, so Spark work the
         zombie submits later dies too) — a hung Spark action then
         aborts executor-side — and StageTimeout raises in the runner.
@@ -1280,9 +1269,7 @@ class Pipeline:
             finally:
                 done.set()
 
-        th = threading.Thread(
-            target=_attempt, name=f"stage-{stage.task_id}-attempt", daemon=True
-        )
+        th = spark_thread(_attempt, name=f"stage-{stage.task_id}-attempt")
         th.start()
         if not done.wait(stage.execution_timeout_s):
             if sc is not None:
@@ -1919,10 +1906,7 @@ class Pipeline:
                     # dagrun at dagrun_timeout regardless of task state.
                     # Python cannot forcibly kill the stage thread; it is
                     # daemonized and abandoned, the run itself fails fast.
-                    threads = [
-                        threading.Thread(target=execute, args=(s,), daemon=True)
-                        for s in ready
-                    ]
+                    threads = [spark_thread(execute, s) for s in ready]
                     for t in threads:
                         t.start()
                     for t in threads:

@@ -285,15 +285,12 @@ def backfill(
             on_run(ds, results)
         return results
 
-    out: dict[datetime, dict] = {}
     if parallelism == 1:
-        for ds, de in windows:
-            out[ds] = one(ds, de)
-        return out
-    from concurrent.futures import ThreadPoolExecutor
+        return {ds: one(ds, de) for ds, de in windows}
+    from artemia_airflow_spark.functions.core import overlap
 
-    with ThreadPoolExecutor(max_workers=parallelism) as pool:
-        futs = [(ds, pool.submit(one, ds, de)) for ds, de in windows]
-        for ds, f in futs:
-            out[ds] = f.result()
-    return out
+    results = overlap(
+        *(lambda ds=ds, de=de: one(ds, de) for ds, de in windows),
+        workers=parallelism,
+    )
+    return {ds: r for (ds, _), r in zip(windows, results)}

@@ -9,9 +9,6 @@ ONE implementation for every round (r13 review: the per-round copies
 r9-r12 were five diverging replicas of the gate).  Usage:
 
     python scripts/dryrun.py [round-tag]
-
-The historical scripts/dryrun_r{9..12}.py are frozen records of what
-ran those rounds; new rounds call this one.
 """
 from __future__ import annotations
 

@@ -72,6 +72,24 @@ def test_repetition_in_unit_interval(spark):
         assert 0.0 <= r.avg_repetition < 1.0
 
 
+@pytest.mark.parametrize("schema", [
+    "g STRING", "gram BIGINT", "gram STRING, n BIGINT",
+])
+def test_decontaminate_rejects_malformed_eval_grams(spark, schema):
+    """A supplied eval_grams relation must be exactly one string column
+    ``gram``; anything else fails on the schema alone, with no job."""
+    d = spark.createDataFrame([(1, "a b c d e")], "doc_id BIGINT, text STRING")
+    grams = spark.createDataFrame([], schema)
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "eval-grams-schema")
+    try:
+        with pytest.raises(ValueError, match="eval_grams"):
+            decontaminate(d, d, "text", "doc_id", eval_grams=grams)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("eval-grams-schema") == []
+
+
 def test_decontaminate_broadcasts_eval_side(spark):
     """The eval-gram semi-join must be broadcast (map-side), never a
     shuffled join of the exploded training grams."""

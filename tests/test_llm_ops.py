@@ -1650,6 +1650,26 @@ def test_cross_source_matrix_bucket_guard_fires(spark):
         ("web", "web", 28)}  # C(8,2) pairs, all on the diagonal
 
 
+@pytest.mark.parametrize("max_bucket", [0, 1])
+def test_cross_source_matrix_rejects_max_bucket_below_two(spark, max_bucket):
+    """max_bucket < 2 fails at entry, before any job: the singleton
+    filter would otherwise drop every bucket the in-plan guard should
+    reject."""
+    from artemia_airflow_spark.operators.dedup import cross_source_matrix
+
+    d = spark.createDataFrame([(1, "some text", "web")],
+                              "doc_id BIGINT, text STRING, source STRING")
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "max-bucket-entry")
+    try:
+        with pytest.raises(ValueError, match="max_bucket must be >= 2"):
+            cross_source_matrix(d, "text", "doc_id", "source",
+                                max_bucket=max_bucket)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("max-bucket-entry") == []
+
+
 def test_grouped_partial_topk_keeps_null_strata(spark):
     """_grouped_partial_topk must not drop NULL group keys (r13
     review: pandas groupby dropna default) — a NULL stratum cuts to

@@ -1384,6 +1384,50 @@ def test_execution_timeout_cancels_spark_job_group(spark):
     assert results["crawl"].state == "failed" and results["crawl"].timed_out
 
 
+def test_execution_timeout_cancels_overlap_side_thread_jobs(spark):
+    """The deadline's job-group cancel reaches Spark work submitted
+    from an ``overlap`` side thread: the side thread inherits the
+    attempt's group, so the 20 s job dies at the 1.5 s deadline instead
+    of running on holding executors."""
+    import time as _time
+
+    from artemia_airflow_spark.functions.core import overlap
+
+    side_done = threading.Event()
+
+    def crawl(batches):
+        for pdf in batches:
+            _time.sleep(20)
+            yield pdf
+
+    # one shuffle-free job: AQE shuffle-stage jobs submitted after the
+    # deadline escape cancelJobGroupAndFutureJobs, which would let a
+    # slow-to-start job outlive the cancel with or without inheritance
+    def side_job(spark_):
+        try:
+            return (
+                spark_.range(0, 8, 1, 4)
+                .mapInPandas(crawl, schema="id long").collect()
+            )
+        finally:
+            side_done.set()
+
+    pipe = Pipeline("exec-timeout-overlap")
+    pipe.add(Stage(
+        "crawl", lambda ctx: overlap(lambda: side_job(ctx.spark)),
+        execution_timeout_s=1.5,
+    ))
+    results = pipe.run(spark=spark, raise_on_failure=False)
+    assert results["crawl"].state == "failed" and results["crawl"].timed_out
+    # an uncancelled side job would sleep its full 20 s
+    assert side_done.wait(8.0)
+    tracker = spark.sparkContext.statusTracker()
+    deadline = _time.monotonic() + 5.0
+    while tracker.getActiveJobsIds() and _time.monotonic() < deadline:
+        _time.sleep(0.1)
+    assert tracker.getActiveJobsIds() == []
+
+
 def test_deferrable_sensor_releases_pool_slot_while_waiting():
     """A14 (r10): a deferred sensor holds NO pool slot — a same-pool
     stage runs to completion WHILE the sensor waits, then the trigger
