@@ -5,17 +5,21 @@ Postgres metadata DB (``docker-compose.yaml:58``, SURVEY.md §1.2 —
 Every completed DagRun is recorded as one immutable parquet directory
 under the ledger root, committed with WRITE-TEMP-THEN-RENAME:
 
-    <root>/_tmp_<uuid>/part-*.parquet      (in flight, invisible)
+    <root>/_tmp_<uuid>/part-00000.parquet  (in flight, invisible)
     <root>/run_id=<pipeline>__<uuid>/      (committed, atomic rename)
 
-``os.rename`` of a directory is atomic on POSIX (and HDFS); readers
-glob only ``run_id=*`` directories, so a reader NEVER sees a
-half-written run and two concurrent writers NEVER collide (each run
-owns a unique directory; there is no shared file to append to — the
-classic parquet-append lost-update problem is designed out rather than
-locked around).  On S3-style object stores, where rename is
-copy+delete, swap the commit step for a real table-format commit
-protocol (Delta/Iceberg) behind the same ``record()`` signature.
+The commit is a driver-side write plus a rename: the driver writes the
+run's few metadata rows with pyarrow (no Spark job) and then renames
+the directory.  The ledger root is a LOCAL POSIX directory — the code
+uses ``os.makedirs``, ``os.listdir`` and ``os.rename``, and only a
+local POSIX directory rename is atomic here.  Readers glob only
+``run_id=*`` directories, so a reader NEVER sees a half-written run
+and two concurrent writers NEVER collide (each run owns a unique
+directory; there is no shared file to append to — the classic
+parquet-append lost-update problem is designed out rather than locked
+around).  A ledger on HDFS or an object store needs another commit
+step (a filesystem-API rename, or a table-format commit protocol such
+as Delta/Iceberg) behind the same ``record()`` signature.
 
 The ledger is sized for metadata, not data: one row per stage per run,
 one small file per run.  Compaction (coalescing old run directories)
@@ -25,6 +29,7 @@ immutable.
 
 from __future__ import annotations
 
+import functools
 import os
 import uuid
 from typing import TYPE_CHECKING, Any, Mapping
@@ -40,6 +45,21 @@ RUN_SCHEMA = (
     "started_at double, finished_at double, "
     "duration_s double, sla_missed boolean, source string"
 )
+
+
+@functools.cache
+def _file_schema():
+    """Arrow schema of a run file: ``RUN_SCHEMA`` minus ``run_id``,
+    which rides the directory name as a partition column.  Derived
+    through Spark's own type mapping (``attempts`` stays INT32), so
+    :meth:`RunLedger.read`'s explicit schema reads these files and
+    older Spark-written run directories alike.  Parsing the DDL needs
+    an active SparkContext."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    fields = [f for f in _parse_datatype_string(RUN_SCHEMA) if f.name != "run_id"]
+    return to_arrow_schema(StructType(fields))
 
 
 def _to_json(value: Any) -> str | None:
@@ -81,46 +101,55 @@ class RunLedger:
         recorded before r10 read back with a NULL source (the explicit
         read schema null-fills old directories).
 
-        The parquet write lands in a ``_tmp_`` directory; the single
+        The run's rows are written on the driver as ONE parquet file
+        (pyarrow; no Spark job) in a ``_tmp_`` directory; the single
         ``os.rename`` at the end is the commit point — before it the
         run is invisible to :meth:`read`, after it the run is complete.
         A writer dying mid-write leaves only a ``_tmp_`` orphan (safe
-        to sweep), never a torn run.
+        to sweep), never a torn run.  The file carries no Arrow schema
+        blob (``store_schema=False``): Spark reads it with
+        ``RUN_SCHEMA``.
 
-        A zero-stage run (empty ``results``) is NOT committed: an empty
-        DataFrame write produces a ``run_id=*`` directory with no part
-        files, which passes :meth:`read`'s listdir check but breaks
-        ``spark.read.parquet`` ('unable to infer schema') for the whole
-        ledger root when such runs are the only committed ones.  The
-        run_id is still returned; there is simply nothing to record.
+        A zero-stage run (empty ``results``) is NOT committed: a
+        ``run_id=*`` directory with no part files passes :meth:`read`'s
+        listdir check but breaks ``spark.read.parquet`` ('unable to
+        infer schema') for the whole ledger root when such runs are the
+        only committed ones.  The run_id is still returned; there is
+        simply nothing to record.
         """
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         run_id = f"{pipeline}__{uuid.uuid4().hex}"
         if not results:
             return run_id
+        # no run_id column: it rides the directory name as a partition
+        # column, so read() recovers it without storing it twice
         rows = [
-            (
-                pipeline,
-                run_id,
-                stage,
-                r.state,
-                int(r.attempts),
-                str(r.error) if r.error is not None else None,
-                _to_json(r.value) if r.state == "success" else None,
-                float(started_at),
-                float(finished_at),
-                float(getattr(r, "duration_s", 0.0)),
-                bool(getattr(r, "sla_missed", False)),
-                source,
-            )
+            {
+                "pipeline": pipeline,
+                "stage": stage,
+                "state": r.state,
+                "attempts": int(r.attempts),
+                "error": str(r.error) if r.error is not None else None,
+                "value_json": _to_json(r.value) if r.state == "success" else None,
+                "started_at": float(started_at),
+                "finished_at": float(finished_at),
+                "duration_s": float(getattr(r, "duration_s", 0.0)),
+                "sla_missed": bool(getattr(r, "sla_missed", False)),
+                "source": source,
+            }
             for stage, r in results.items()
         ]
         tmp = os.path.join(self.root, f"_tmp_{uuid.uuid4().hex}")
         final = os.path.join(self.root, f"run_id={run_id}")
-        df = spark.createDataFrame(rows, RUN_SCHEMA).coalesce(1)
-        # drop the run_id data column: it rides the directory name as a
-        # partition column, so read() recovers it without storing it twice
-        df.drop("run_id").write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)  # COMMIT (atomic on POSIX/HDFS)
+        os.makedirs(tmp)
+        pq.write_table(
+            pa.Table.from_pylist(rows, schema=_file_schema()),
+            os.path.join(tmp, "part-00000.parquet"),
+            store_schema=False,
+        )
+        os.rename(tmp, final)  # COMMIT (atomic on a local POSIX filesystem)
         return run_id
 
     # -- read ----------------------------------------------------------

@@ -100,3 +100,65 @@ def test_rwlock_writer_preference_blocks_new_readers():
     assert writer_in.wait(5.0) and reader_in.wait(5.0)
     tw.join(5.0), tr.join(5.0)
     assert order == ["writer", "reader"]
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_second_scan_reuses_the_parquet_schema(spark):
+    """Only the first scan of a fixture file runs the schema-inference
+    job; a later scan passes the remembered schema and submits none."""
+    first = scan(spark, SF_ORACLE, "nation")
+    second, jobs = _jobs_in_group(
+        spark, "scan-memo-hit", lambda: scan(spark, SF_ORACLE, "nation"))
+    assert jobs == []
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_scan_sees_a_rewritten_file(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), path)
+    assert scan(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"],
+                             "r_comment": ["x", "y"]}), path)
+    df = scan(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert sorted(r.r_comment for r in df.collect()) == ["x", "y"]
+
+
+def test_scan_reinfers_when_an_inference_setting_changes(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"r_regionkey": [0], "r_name": [b"A"]}),
+                   str(tmp_path / "region.parquet"))
+    key = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        assert dict(scan(spark, str(tmp_path), "region").dtypes)["r_name"] == "binary"
+        spark.conf.set(key, "true")
+        assert dict(scan(spark, str(tmp_path), "region").dtypes)["r_name"] == "string"
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_events_scan_on_a_memo_hit_keeps_timestamp_ts(spark):
+    from pyspark.sql.types import TimestampType
+
+    scan(spark, SF_ORACLE, "events")
+    df, jobs = _jobs_in_group(
+        spark, "scan-events-hit", lambda: scan(spark, SF_ORACLE, "events"))
+    assert jobs == []
+    assert isinstance(df.schema["ts"].dataType, TimestampType)

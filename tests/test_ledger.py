@@ -301,3 +301,89 @@ def test_runs_report_orders_newest_first_and_caps(spark, root):
     assert ("p", 3) not in by               # t0=10 run trimmed
     assert by[("q", 1)].duration_ms == 1500
     assert by[("p", 2)].total_attempts == 2
+
+
+def test_record_submits_no_spark_job(spark, root):
+    """The commit is a driver-side write plus rename: recording a run
+    must not cost a Spark job on the DAG's metadata path."""
+    led = RunLedger(root)
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "ledger-record")
+    try:
+        run_id = led.record(spark, "p", {"s1": StageResult("success", value=1),
+                                         "s2": StageResult("failed", attempts=2)})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("ledger-record") == []
+    assert os.listdir(root) == [f"run_id={run_id}"]
+
+
+def _record_with_spark_writer(spark, root, pipeline, results, started_at):
+    """A run directory as the earlier Spark-writer ledger committed it
+    (part file plus _SUCCESS and .crc files)."""
+    import json
+    import uuid
+
+    from artemia_airflow_spark.ledger import RUN_SCHEMA
+
+    run_id = f"{pipeline}__{uuid.uuid4().hex}"
+    rows = [
+        (pipeline, run_id, stage, r.state, int(r.attempts),
+         None if r.error is None else str(r.error),
+         json.dumps(r.value) if r.state == "success" else None,
+         started_at, started_at + 1.0, float(r.duration_s),
+         bool(r.sla_missed), "scheduled")
+        for stage, r in results.items()
+    ]
+    tmp = os.path.join(root, f"_tmp_{uuid.uuid4().hex}")
+    (spark.createDataFrame(rows, RUN_SCHEMA).coalesce(1)
+     .drop("run_id").write.parquet(tmp))
+    os.rename(tmp, os.path.join(root, f"run_id={run_id}"))
+    return run_id
+
+
+def test_mixed_vintage_root_reads_back_every_row(spark, root):
+    """Run directories written by the earlier Spark writer and by the
+    driver-side writer share one ledger root: every reader returns all
+    rows with RUN_SCHEMA's types."""
+    led = RunLedger(root)
+    old = _record_with_spark_writer(spark, root, "p", {
+        "s1": StageResult("success", value={"n": 1}, attempts=1, duration_s=1.0),
+        "s2": StageResult("failed", error="boom", attempts=3, duration_s=3.0,
+                          sla_missed=True),
+    }, started_at=10.0)
+    new1 = led.record(spark, "p", {
+        "s1": StageResult("success", value=[1, 2], attempts=2, duration_s=2.0),
+        "s2": StageResult("skipped"),
+    }, started_at=20.0, finished_at=21.0, source="manual")
+    new2 = led.record(spark, "p", {
+        "s1": StageResult("success", value="x", attempts=1, duration_s=4.0),
+        "s2": StageResult("success", value=None, attempts=1, duration_s=5.0),
+    }, started_at=30.0, finished_at=31.0)
+
+    df = led.read(spark)
+    assert dict(df.dtypes)["attempts"] == "int"
+    rows = {(r.run_id, r.stage): r for r in df.collect()}
+    assert len(rows) == 6 and {k[0] for k in rows} == {old, new1, new2}
+    assert all(isinstance(r.attempts, int) for r in rows.values())
+    assert rows[(old, "s2")].attempts == 3 and rows[(old, "s2")].error == "boom"
+    assert rows[(old, "s2")].sla_missed is True
+    assert rows[(new1, "s1")].attempts == 2 and rows[(new1, "s1")].source == "manual"
+    assert rows[(new1, "s2")].value_json is None
+    assert rows[(new2, "s2")].duration_s == 5.0
+
+    runs = {r.run_id: r for r in led.runs(spark, "p").collect()}
+    assert {k: (r.n_stages, r.any_failed, r.total_attempts, r.n_sla_missed)
+            for k, r in runs.items()} == {
+        old: (2, 1, 4, 1), new1: (2, 0, 2, 0), new2: (2, 0, 2, 0)}
+
+    (h,) = led.health(spark).collect()
+    assert (h.n_runs, h.n_failed_runs, h.n_stages, h.n_stage_failures,
+            h.n_sla_missed) == (3, 1, 6, 1, 1)
+    # executed durations [1, 2, 3, 4, 5] (the skipped stage is out)
+    assert (h.p50_stage_ms, h.p95_stage_ms) == (3000, 4800)
+
+    assert led.last_run_states(spark, "p") == {"s1": "success", "s2": "success"}
+    assert led.resumable_values(spark, old) == {"s1": {"n": 1}}
+    assert led.resumable_values(spark, new1) == {"s1": [1, 2]}
+    assert led.resumable_values(spark, new2) == {"s1": "x", "s2": None}
