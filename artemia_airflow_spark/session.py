@@ -15,7 +15,10 @@ from pyspark.sql import SparkSession
 # Defaults chosen for the driver's local[$SPARK_GRAFT_CPUS] harness at
 # sf<=0.1.  On a real cluster the same code runs unchanged; only these
 # knobs move (shuffle.partitions ~ 2-3x total cores, maxPartitionBytes
-# 128-256m, AQE handles the rest at runtime).
+# 128-256m, AQE handles the rest at runtime).  The codegen class cache
+# (codegen.cache.maxEntries 4096, not Spark's 100) does not move with the
+# cluster: it is sized to the engine's working set of generated classes,
+# which is a property of the plans, not of the data or the cores.
 _LOCAL_DEFAULTS: dict[str, str] = {
     # AQE: runtime re-planning — coalesces tiny shuffle partitions at
     # small SF, splits skewed ones at large SF.  Core of the
@@ -38,6 +41,15 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     # at 8g (measured: late queries 5-10x slower), so default higher.
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
     "spark.ui.enabled": "false",
+    # Spark keeps compiled whole-stage/projection classes in an LRU of
+    # this many entries (default 100).  One q_corpus_pipeline run needs
+    # ~138 distinct classes, so at 100 the cyclic access misses every time
+    # and each later run recompiled ~127 of them (0.9-1.1 s of Janino, then
+    # JIT warm-up of the new classes).  One pass over the 238 timed faces
+    # at sf0.01 compiles 3,233 classes (235 MB metaspace after, 227 MB at
+    # 100 entries); 4096 holds them all.
+    # Static: read once when the context starts.
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
 
@@ -62,7 +74,12 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable subset of engine defaults to an
     externally-provided session (the driver passes its own).
 
-    Only touches confs that are safe to set post-startup.
+    Only touches confs that are safe to set post-startup.  The codegen
+    class cache size (``spark.sql.codegen.cache.maxEntries``) is static,
+    so a session built elsewhere, such as the driver's, keeps Spark's 100
+    entries and the composed faces (``q_corpus_pipeline`` and the other
+    faces that need over 100 generated classes) recompile most of their
+    classes on every run there.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
@@ -70,3 +87,15 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # static conf on some builds; harmless
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes compiled in this JVM so far (Spark's
+    ``CodegenMetrics`` compilation count; a codegen-cache hit adds 0).
+
+    Take the difference around a run: a repeat in a session whose codegen
+    cache holds the run's classes compiles at most a few (AQE can number
+    whole-stage codegen stages differently from one run to the next).
+    """
+    return int(spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+               .METRIC_COMPILATION_TIME().getCount())

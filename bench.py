@@ -54,6 +54,7 @@ def emit_report(
     missing: list[str] | None = None,
     stdout=None,
     stderr=None,
+    codegen_compiles: dict[str, int] | None = None,
 ) -> None:
     """Write the full record to `out_path` and the one-line JSON to stdout.
 
@@ -64,6 +65,9 @@ def emit_report(
     the stdout JSON and a merged-stream capture ended with it.  So:
     file first, then the (optional) stderr regression note, flushed,
     then the stdout JSON, flushed — nothing after.
+
+    `codegen_compiles` ({face: generated classes its last repetition
+    compiled}) goes to the file only; the stdout line does not change.
     """
     stdout = stdout if stdout is not None else sys.stdout
     stderr = stderr if stderr is not None else sys.stderr
@@ -79,6 +83,7 @@ def emit_report(
         "watch_ratio_only": watch,
         "errors": errors,
         "queries_missing_from_baseline": missing or [],
+        "codegen_compiles": codegen_compiles or {},
     }
     with open(out_path, "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
@@ -101,7 +106,7 @@ def emit_report(
 
 
 def main() -> None:
-    from artemia_airflow_spark.session import build_session
+    from artemia_airflow_spark.session import build_session, codegen_compiles
 
     import __spark_entry__ as entrymod
 
@@ -131,6 +136,12 @@ def main() -> None:
     # far better estimator of the plan's true cost.
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
+    # Generated classes the last repetition compiled, read outside the
+    # timed region.  A face whose classes stay in Spark's codegen cache
+    # compiles ~0 on a repeat (a few whole-stage classes can recompile
+    # when AQE numbers its codegen stages differently); a count near the
+    # first run's means the cache is thrashing.
+    compiles: dict[str, int] = {}
 
     def _reset(spark) -> None:
         """Return the JVM to an isolated-run state between queries.
@@ -166,10 +177,13 @@ def main() -> None:
             _reset(spark)
             for _ in range(3):
                 spark.catalog.clearCache()
+                compiled = codegen_compiles(spark)
                 t0 = time.perf_counter()
                 qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
                 best = min(best, time.perf_counter() - t0)
+                compiled = codegen_compiles(spark) - compiled
             timings[name] = round(best, 4)
+            compiles[name] = compiled
         except Exception as e:  # noqa: BLE001 — one broken query must
             # not zero out the whole bench (round 3 lost its entire
             # BENCH record to a single fixture-schema error).
@@ -227,6 +241,7 @@ def main() -> None:
         watch,
         out_path,
         missing=sorted(set(timings) - set(baseline)),
+        codegen_compiles=compiles,
     )
 
 

@@ -35,6 +35,7 @@ def _run_emit(tmp_path, regressions):
         missing=["q_beta"],
         stdout=merged,
         stderr=merged,
+        codegen_compiles={"q_alpha": 0, "q_beta": 4},
     )
     return merged.getvalue(), tmp_path / "bench_full.json"
 
@@ -56,11 +57,16 @@ def test_json_is_last_line_with_regressions(tmp_path):
     full = json.loads(full_path.read_text())
     assert full["regressions_vs_baseline"] == regressions
     assert full["queries_missing_from_baseline"] == ["q_beta"]
+    assert full["codegen_compiles"] == {"q_alpha": 0, "q_beta": 4}
+    assert "codegen_compiles" not in parsed
 
 
 def test_json_is_only_line_without_regressions(tmp_path):
     captured, _ = _run_emit(tmp_path, {})
     lines = [ln for ln in captured.splitlines() if ln.strip()]
     assert len(lines) == 1
-    parsed = json.loads(lines[0])
-    assert parsed["value"] == 1.734
+    # the per-face compile counts stay in the file: the stdout line is
+    # exactly the driver's record
+    assert lines[0] == (
+        '{"metric":"sum_sec_all_declared_queries","value":1.734,"unit":"sec",'
+        '"sf":0.1,"queries":{"q_alpha":1.234,"q_beta":0.5}}')

@@ -1044,6 +1044,27 @@ def test_corpus_pipeline_no_stage_rescans_the_corpus(spark):
     assert final.count("documents.parquet") == 0, final[:1200]
 
 
+def test_corpus_pipeline_repeat_reuses_generated_classes(spark):
+    """A repeated q_corpus_pipeline run finds its generated classes in
+    Spark's codegen cache instead of recompiling them.  The face needs
+    ~138 classes; with Spark's default 100-entry LRU every repeat
+    recompiled ~130 of them.  A repeat may still compile a few whole-stage
+    classes: AQE numbers codegen stages in the order it plans query
+    stages, which can vary between runs, and the stage id is part of the
+    class text (measured 0, 4 or 8)."""
+    from artemia_airflow_spark.session import codegen_compiles
+
+    def run() -> int:
+        before = codegen_compiles(spark)
+        entrymod.queries()["q_corpus_pipeline"](spark, SF_ORACLE) \
+            .write.format("noop").mode("overwrite").save()
+        return codegen_compiles(spark) - before
+
+    run()
+    repeat = run()
+    assert repeat <= 16, repeat
+
+
 def _df_plan(spark, df) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode
