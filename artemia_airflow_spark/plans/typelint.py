@@ -10,8 +10,9 @@ lint therefore maps both engines' types onto the pandas-render class
 and requires per-column equality, banning HUGEINT outright.
 
 ONE implementation, imported by both tests/test_oracle.py (the gate)
-and scripts/quickcheck.py (the fast iteration loop) — the r15 review
-flagged the two hand-maintained copies this module replaces.
+and scripts/dryrun.py (the round gate and, given face names, the fast
+iteration loop) — the r15 review flagged the two hand-maintained copies
+this module replaces.
 """
 
 from __future__ import annotations

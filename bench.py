@@ -105,21 +105,14 @@ def emit_report(
     stdout.flush()
 
 
-def main() -> None:
-    from artemia_airflow_spark.session import build_session, codegen_compiles
-
-    import __spark_entry__ as entrymod
-
-    spark = build_session("aas-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    qs = {k: v for k, v in entrymod.queries().items() if k not in SKIP}
-
-    # JVM/codegen warm-up on a trivial plan so q1 doesn't pay startup.
-    spark.range(1_000_000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
-    # Python-worker warm-up: fork + numpy/pandas import on every core,
-    # so the first pandas-UDF query isn't charged ~10s of cold start.
+def warm_up(spark) -> None:
+    """Pay the session's one-off costs before the first timed face: a
+    trivial JVM job (codegen, scheduler start-up), then a pandas UDF
+    on every core, so the first pandas-UDF face isn't charged ~10s of
+    Python-worker fork + numpy/pandas import."""
     from pyspark.sql.functions import pandas_udf
+
+    spark.range(1_000_000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
 
     @pandas_udf("long")
     def _warm(x: pd.Series) -> pd.Series:
@@ -130,60 +123,81 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
 
-    # Best-of-3 per query: one measurement is hostage to transient
-    # machine noise (observed 20x outliers on an idle box, and 3-7x
-    # outliers that survived best-of-2); the min of three runs is a
-    # far better estimator of the plan's true cost.
+
+def _reset(spark) -> None:
+    """Return the JVM to an isolated-run state between faces.
+
+    System.gc() alone is not enough: the iterative queries
+    (q_dedup_clusters et al.) leave eager-localCheckpoint RDD
+    blocks pinned in the block manager for as long as Python holds
+    DataFrame references, and that heap pressure inflated the
+    queries that happen to run right after them (q_fn_array read
+    6.4x in-suite vs 1.8x isolated in r4; at 100x replica data an
+    untouched face read 5.3 -> 18.3 s by run position).  Order matters:
+    unpersist leftover RDDs, drop Python-side refs so py4j frees
+    the JVM handles, then full GC.
+    """
+    import gc
+
+    spark.catalog.clearCache()
+    try:
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+            rdd.unpersist()
+    except Exception:  # noqa: BLE001 — cleanup must never kill the bench
+        pass
+    gc.collect()
+    spark._jvm.System.gc()
+
+
+def time_face(spark, fn, sf_dir: str) -> tuple[float, int]:
+    """Best-of-3 wall time of ``fn(spark, sf_dir)`` through the noop sink,
+    and the generated classes its last repetition compiled.
+
+    Best-of-3: one measurement is hostage to transient machine noise
+    (observed 20x outliers on an idle box, and 3-7x outliers that
+    survived best-of-2); the min of three runs is a far better
+    estimator of the plan's true cost.  One full reset per face (a
+    single long-lived local JVM accumulates heap pressure, and
+    late-suite queries were measured 3-10x their isolated cost purely
+    from position — SCALE.md bench methodology), ``clearCache`` per
+    repetition.  The compile count is read outside the timed region: a
+    face whose classes stay in Spark's codegen cache compiles ~0 on a
+    repeat (a few whole-stage classes can recompile when AQE numbers
+    its codegen stages differently); a count near the first run's means
+    the cache is thrashing.
+    """
+    from artemia_airflow_spark.session import codegen_compiles
+
+    _reset(spark)
+    best = float("inf")
+    for _ in range(3):
+        spark.catalog.clearCache()
+        compiled = codegen_compiles(spark)
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        best = min(best, time.perf_counter() - t0)
+        compiled = codegen_compiles(spark) - compiled
+    return round(best, 4), compiled
+
+
+def main() -> None:
+    from artemia_airflow_spark.session import build_session
+
+    import __spark_entry__ as entrymod
+
+    spark = build_session("aas-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    qs = {k: v for k, v in entrymod.queries().items() if k not in SKIP}
+    warm_up(spark)
+
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    # Generated classes the last repetition compiled, read outside the
-    # timed region.  A face whose classes stay in Spark's codegen cache
-    # compiles ~0 on a repeat (a few whole-stage classes can recompile
-    # when AQE numbers its codegen stages differently); a count near the
-    # first run's means the cache is thrashing.
+    # generated classes each face's last repetition compiled
     compiles: dict[str, int] = {}
-
-    def _reset(spark) -> None:
-        """Return the JVM to an isolated-run state between queries.
-
-        System.gc() alone is not enough: the iterative queries
-        (q_dedup_clusters et al.) leave eager-localCheckpoint RDD
-        blocks pinned in the block manager for as long as Python holds
-        DataFrame references, and that heap pressure inflated the
-        queries that happen to run right after them (q_fn_array read
-        6.4x in-suite vs 1.8x isolated in r4).  Order matters:
-        unpersist leftover RDDs, drop Python-side refs so py4j frees
-        the JVM handles, then full GC.
-        """
-        import gc
-
-        spark.catalog.clearCache()
-        try:
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-        except Exception:  # noqa: BLE001 — cleanup must never kill the bench
-            pass
-        gc.collect()
-        spark._jvm.System.gc()
-
     for name in sorted(qs):
-        best = float("inf")
         try:
-            # Explicit full reset between queries: a single long-lived
-            # local JVM accumulates heap pressure over the 100+ query
-            # suite, and late-suite queries were measured 3-10x their
-            # isolated cost purely from position (SCALE.md bench
-            # methodology note).
-            _reset(spark)
-            for _ in range(3):
-                spark.catalog.clearCache()
-                compiled = codegen_compiles(spark)
-                t0 = time.perf_counter()
-                qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-                compiled = codegen_compiles(spark) - compiled
-            timings[name] = round(best, 4)
-            compiles[name] = compiled
+            timings[name], compiles[name] = time_face(spark, qs[name], SF_DIR)
         except Exception as e:  # noqa: BLE001 — one broken query must
             # not zero out the whole bench (round 3 lost its entire
             # BENCH record to a single fixture-schema error).

@@ -2,13 +2,17 @@
 """Shared round-closing dry run (FIXTURES.md round-verification
 protocol): the full PRIORITY window at sf0.001 + sf0.01 + sf0.1,
 every remaining registry query at sf0.01 — driver-gate semantics
-(sorted stringified rows vs the DuckDB oracle; rows-only queries
-execute + row count).
+(sorted stringified rows vs the DuckDB oracle, plus per-column
+agreement of the pandas-rendered types, which the driver's value hash
+sees; rows-only queries execute + row count).
 
 ONE implementation for every round (r13 review: the per-round copies
 r9-r12 were five diverging replicas of the gate).  Usage:
 
-    python scripts/dryrun.py [round-tag]
+    python scripts/dryrun.py [round-tag] [q_name ...]
+
+Named faces are checked alone, at the three SFs (the fast iteration
+loop while changing a face).
 """
 from __future__ import annotations
 
@@ -18,6 +22,7 @@ import time
 sys.path.insert(0, "/root/repo")
 
 TAG = sys.argv[1] if len(sys.argv) > 1 else "rX"
+FACES = sys.argv[2:]
 
 from pyspark.sql import SparkSession
 
@@ -38,10 +43,12 @@ from artemia_airflow_spark.plans.registry import (
     derive_priority,
     latest_attested_rounds,
 )
+from artemia_airflow_spark.plans.typelint import duck_render_class, spark_render_class
 
 q, o = E.queries(), E.oracle_sql()
 PRIORITY = derive_priority()
-assert set(PRIORITY) <= set(q), sorted(set(PRIORITY) - set(q))
+CHECK = FACES or PRIORITY
+assert set(CHECK) <= set(q), sorted(set(CHECK) - set(q))
 
 # Rotation-staleness gate (VERDICT r16 item 4): oldest-first rotation
 # over a DRIVER_WINDOW-row window guarantees every declared query a
@@ -98,6 +105,20 @@ def duck_for(sf_dir):
     return con
 
 
+def type_problems(sdf, con, sql):
+    """Columns whose pandas-rendered type differs between the engines
+    (DuckDB's HUGEINT renders as float64, never int64: banned)."""
+    sp = {f.name.lower(): spark_render_class(f.dataType.simpleString())
+          for f in sdf.schema.fields}
+    du = {r[0].lower(): duck_render_class(r[1])
+          for r in con.execute(f"DESCRIBE SELECT * FROM ({sql})").fetchall()}
+    probs = [f"{c}: HUGEINT in oracle" for c, cls in du.items() if cls == "HUGEINT"]
+    probs += [f"{c}: spark={sp.get(c)} duck={du.get(c)}"
+              for c in sorted(set(sp) | set(du))
+              if sp.get(c) != du.get(c) and du.get(c) != "HUGEINT"]
+    return probs
+
+
 def check(name, sf_dir, con):
     sdf = q[name](spark, sf_dir)
     srows = sorted(tuple(str(x) for x in r) for r in sdf.collect())
@@ -106,7 +127,13 @@ def check(name, sf_dir, con):
     drows = sorted(
         tuple(str(x) for x in r) for r in con.execute(o[name]).fetchall()
     )
-    assert srows == drows, (name, sf_dir, srows[:2], drows[:2])
+    if srows != drows:
+        sonly, donly = set(srows) - set(drows), set(drows) - set(srows)
+        raise AssertionError(
+            f"{len(srows)} vs {len(drows)} rows; spark-only "
+            f"{sorted(sonly)[:2]} duck-only {sorted(donly)[:2]}")
+    tprobs = type_problems(sdf, con, o[name])
+    assert not tprobs, f"TYPE-MISMATCH {tprobs} (the driver's hash fails)"
     return f"ok n={len(srows)}"
 
 
@@ -114,7 +141,7 @@ fails = []
 for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01",
                "/root/testdata/sf0.1"):
     con = duck_for(sf_dir)
-    for name in PRIORITY:
+    for name in CHECK:
         t0 = time.time()
         try:
             msg = check(name, sf_dir, con)
@@ -126,8 +153,7 @@ for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01",
     con.close()
 
 con = duck_for("/root/testdata/sf0.01")
-prio = set(PRIORITY)
-rest = [n for n in q if n not in prio]
+rest = [] if FACES else [n for n in q if n not in PRIORITY]
 for name in rest:
     t0 = time.time()
     try:

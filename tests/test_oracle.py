@@ -49,12 +49,12 @@ NAMES, _QUERIES, _ORACLE = _all_oracle_cases()
 # the hash even when the VALUES are identical (the r13/r14 red-row class:
 # DuckDB widens SUM(BIGINT)-derived arithmetic to HUGEINT, which pandas
 # materializes as float64 — `316667.0` vs `316667`).  Value comparison
-# (this file's test_oracle_match, scripts/quickcheck.py) is blind to it.
+# (this file's test_oracle_match) is blind to it.
 # The lint therefore checks RENDERED-TYPE agreement per column: map both
 # engines' types onto the pandas-render class and require equality, and
 # ban HUGEINT/UHUGEINT outright (it never renders as int64).  The maps
 # live in artemia_airflow_spark.plans.typelint — ONE implementation
-# shared with scripts/quickcheck.py.
+# shared with scripts/dryrun.py, whose compare runs the same check.
 from artemia_airflow_spark.plans.typelint import (
     duck_render_class as _duck_render_class,
     spark_render_class as _spark_render_class,
