@@ -10,6 +10,7 @@ Spark AND matches the DuckDB oracle computing the same way.
 from __future__ import annotations
 
 import threading
+import warnings
 from collections.abc import Callable
 from typing import Any
 
@@ -84,11 +85,86 @@ def spread_for_compute(df, min_partitions: int | None = None):
     shuffle of the raw rows is cheap relative to the compute.  No-op
     when the input already has enough partitions (the 100 TB case —
     real inputs arrive with thousands of splits).
+
+    The input must hold no exchange (pass the scan side, before any
+    join or aggregation): counting partitions plans the frame, and
+    under AQE that runs every exchange below it as a job, which the
+    returned frame then runs again.
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+# ``SparkContext.setCheckpointDir`` is context-GLOBAL: two threads
+# re-pointing it concurrently can land one caller's checkpoint blocks
+# in the OTHER caller's scratch directory — which that caller then
+# retires per the documented contract, deleting live blocks a
+# DataFrame still references (ADVICE r10).  Every reliable checkpoint
+# holds this lock across set-dir + materialize.
+_RELIABLE_CHECKPOINT_LOCK = threading.Lock()
+
+
+def cut(df, name: str, *, eager: bool = True, checkpoint_dir: str | None = None):
+    """The engine's one lineage cut: materialize ``df`` and return a
+    frame whose plan starts at the stored blocks.  ``name`` is a
+    literal unique in the package (``module.function.var``); an eager
+    cut's jobs run under the Spark job description ``cut <name>``, and
+    the caller's description comes back afterwards, also when the cut
+    raises.  A lazy local cut runs no job here: the first action
+    materializes it in-flight.
+
+    Durability tier (round 10): with ``checkpoint_dir`` set, a RELIABLE
+    ``df.checkpoint()`` writes the blocks to that fault-tolerant path
+    and survives executor loss (iterative loops on a 1000-executor
+    cluster); with ``None``, ``localCheckpoint`` keeps the blocks on
+    executors — faster, and fine in local mode or when the caller
+    consumes the result before depending on it.  ``setCheckpointDir``
+    is SparkContext-global, so the reliable tier holds a module lock
+    across set-dir + materialize (ADVICE r10) and therefore ALWAYS
+    materializes eagerly, warning on ``eager=False``: a lazy reliable
+    checkpoint would bind the global dir at a later action, outside
+    the lock.  It persists BEFORE checkpointing, so the write reads
+    the cached blocks instead of recomputing the plan, and drops the
+    persist once the data is durable — unless the caller had cached
+    the frame.  Files under ``checkpoint_dir`` are the caller's scratch
+    to retire: Spark only self-cleans with
+    ``spark.cleaner.referenceTracking.cleanCheckpoints``, a
+    context-start conf this library cannot set."""
+    if checkpoint_dir is None and not eager:
+        return df.localCheckpoint(eager=False)
+    if not eager:
+        # observable, not just documented (ADVICE r11): the override
+        # is a correctness rule of the reliable tier, but a caller
+        # passing eager=False deserves a runtime signal
+        warnings.warn(
+            f"cut {name}: eager=False is ignored on the reliable "
+            "(checkpoint_dir) tier — the checkpoint always materializes "
+            "eagerly under the module lock so the global checkpoint dir "
+            "cannot be rebound before the write",
+            stacklevel=2,
+        )
+    sc = df.sparkSession.sparkContext
+    prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"cut {name}")
+    try:
+        if checkpoint_dir is None:
+            return df.localCheckpoint(eager=True)
+        # unpersisting a cache the CALLER established would evict its
+        # blocks and force full recomputes downstream (r10 review)
+        already = df.storageLevel.useMemory or df.storageLevel.useDisk
+        if not already:
+            df.persist()
+        try:
+            with _RELIABLE_CHECKPOINT_LOCK:
+                sc.setCheckpointDir(checkpoint_dir)
+                return df.checkpoint(eager=True)
+        finally:
+            if not already:
+                df.unpersist()
+    finally:
+        sc.setLocalProperty("spark.job.description", prior)
 
 
 def spark_thread(target: Callable, *args, name: str | None = None) -> threading.Thread:

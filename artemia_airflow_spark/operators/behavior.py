@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from artemia_airflow_spark.catalog import scan
-from artemia_airflow_spark.functions.core import guarded_e6_ratio
+from artemia_airflow_spark.functions.core import cut, guarded_e6_ratio
 from artemia_airflow_spark.plans.registry import declared
 from artemia_airflow_spark.session import ensure_engine_conf
 
@@ -458,7 +458,7 @@ def pagerank_types(
     Scale shape: the corpus is touched exactly twice — the behavioral
     family's single user_id exchange for lag pairs (map-side-combined
     into a |types|^2 edge relation) and one distinct-type aggregate
-    (carries <= partitions x |types| rows) — then ``truncate_lineage``
+    (carries <= partitions x |types| rows) — then ``cut``
     pins both tiny relations so the iterations never rescan the fact
     table; every per-iteration join is node- or edge-count-sized and
     broadcasts.  The bounded-vocabulary contract (|types|^2 edges fit
@@ -469,8 +469,6 @@ def pagerank_types(
     ~9.2e12 transitions per (src,dst) pair — beyond any per-pair count
     at 100 TB; pr*prob_e6 <= 1e9 * 1e6 = 1e15.
     """
-    from artemia_airflow_spark.operators.dedup import truncate_lineage
-
     w = Window.partitionBy(user_col).orderBy(ts_col, order_tiebreak)
     pairs = events.select(
         F.lag(F.col(type_col)).over(w).alias("src"),
@@ -478,7 +476,8 @@ def pagerank_types(
     ).filter(F.col("src").isNotNull())
     edges = pairs.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("cnt"))
     out_total = F.sum("cnt").over(Window.partitionBy("src"))
-    eprob = truncate_lineage(
+    # kept, sf0.1 cut -> none: 2.30 -> 12.95 MB read, 2.27 -> 12.92 MB shuffled
+    eprob = cut(
         edges.select(
             "src", "dst", "cnt", out_total.alias("__out"),
         ).select(
@@ -486,10 +485,12 @@ def pagerank_types(
             guarded_e6_ratio("cnt", "__out", op="transition_probs")
             .alias("prob_e6"),
         ),
-        None,
+        "behavior.pagerank_types.eprob",
     )
-    nodes = truncate_lineage(
-        events.select(F.col(type_col).alias("node")).distinct(), None
+    # kept: tests/test_plans.py::test_pagerank_iterations_never_rescan_the_fact_table pins it
+    nodes = cut(
+        events.select(F.col(type_col).alias("node")).distinct(),
+        "behavior.pagerank_types.nodes",
     )
     srcs = eprob.select("src").distinct()
     n_row = nodes.agg(F.count(F.lit(1)).alias("__n"))
@@ -498,7 +499,7 @@ def pagerank_types(
         .selectExpr("node", "CAST(1000000000 AS BIGINT) DIV __n AS pr_e9")
     )
     for _ in range(iters):
-        pr = truncate_lineage(pr, None)
+        pr = cut(pr, "behavior.pagerank_types.pr")
         inc = (
             eprob.join(F.broadcast(pr), eprob.src == pr.node)
             .selectExpr("dst", "(pr_e9 * prob_e6) DIV 1000000 AS __c")
@@ -795,13 +796,12 @@ def active_users(
     relation never shuffles twice and nothing is user-partitioned, so
     hot users cost nothing extra.
     """
-    from artemia_airflow_spark.operators.dedup import truncate_lineage
-
     day = F.expr(f"unix_micros({ts_col}) DIV 86400000000")
-    ud = truncate_lineage(
+    # kept, sf0.1 cut -> none: 7.37 -> 0.90 MB read, 0.65 -> 0.89 MB shuffled
+    ud = cut(
         events.select(F.col(user_col).alias("u"), day.alias("day"))
         .distinct(),
-        None,
+        "behavior.active_users.ud",
     )
     dau = ud.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
     fan = (
@@ -894,9 +894,9 @@ def covisitation_lift(
         )
         .distinct()
     )
-    from artemia_airflow_spark.operators.dedup import truncate_lineage
-
-    st = truncate_lineage(st, None)  # 3 consumers: pairs x2 + margins
+    # 3 consumers: pairs x2 + margins
+    # kept, sf0.1 cut -> none: 42.34 -> 9.26 MB read, 3.13 -> 6.85 MB shuffled
+    st = cut(st, "behavior.covisitation_lift.st")
     a = st.withColumnsRenamed({"t": "type_a"})
     b = st.withColumnsRenamed({"t": "type_b"})
     pairs = (

@@ -19,7 +19,6 @@ candidate join linear-ish in corpus size instead of O(n^2).
 
 from __future__ import annotations
 
-import threading
 import warnings
 
 import numpy as np
@@ -30,6 +29,7 @@ from pyspark.sql import functions as F
 
 from artemia_airflow_spark.catalog import scan
 from artemia_airflow_spark.functions.core import (
+    cut,
     guarded_e6_ratio,
     process_scratch_dir,
     spread_for_compute,
@@ -42,89 +42,20 @@ from artemia_airflow_spark.session import ensure_engine_conf
 # overflow under ANSI arithmetic (Spark 4 default).
 _MERSENNE = (1 << 31) - 1
 
-# ``SparkContext.setCheckpointDir`` is context-GLOBAL: two threads
-# re-pointing it concurrently can land one caller's checkpoint blocks
-# in the OTHER caller's scratch directory — which that caller then
-# retires per the documented contract, deleting live blocks a
-# DataFrame still references (ADVICE r10).  Every reliable checkpoint
-# holds this lock across set-dir + materialize.
-_RELIABLE_CHECKPOINT_LOCK = threading.Lock()
-
-
-def truncate_lineage(
-    df: DataFrame, checkpoint_dir: str | None, *, eager: bool = True
-) -> DataFrame:
-    """Cut a DataFrame's lineage, choosing the durability tier (round
-    10, VERDICT r9 #5): with ``checkpoint_dir`` set, a RELIABLE
-    ``df.checkpoint()`` writes the blocks to that (fault-tolerant)
-    path and survives executor loss — the right tier for iterative
-    loops on a 1000-executor cluster where losing an executor mid-loop
-    is routine; with ``None`` (default), ``localCheckpoint`` keeps the
-    blocks on executors — faster, and fine in local mode or when the
-    caller consumes the result before depending on it.
-
-    ``setCheckpointDir`` is SparkContext-global, so the reliable tier
-    holds a module lock across set-dir + materialize (ADVICE r10:
-    concurrent callers with different dirs could otherwise checkpoint
-    into each other's scratch — fatal once a caller retires its
-    directory) — and for the same reason it ALWAYS materializes
-    eagerly, ignoring ``eager=False``: a lazy reliable checkpoint
-    binds the global dir at whatever later action materializes it,
-    outside any lock.  The reliable tier
-    persists BEFORE checkpointing (r10 review): a bare
-    ``df.checkpoint(eager=True)`` computes the plan for the count and
-    then RECOMPUTES it for the checkpoint write (the classic
-    cache-before-checkpoint rule) — the persist makes the write read
-    the cached blocks, and is dropped as soon as the checkpoint data
-    is durable.  Checkpoint files under ``checkpoint_dir`` are the
-    CALLER's scratch to retire (delete the directory after the run, or
-    point a recurring job at a fresh dated path): Spark only
-    self-cleans with ``spark.cleaner.referenceTracking
-    .cleanCheckpoints``, a context-start conf this library cannot
-    set."""
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=eager)
-    if not eager:
-        # observable, not just documented (ADVICE r11): the override
-        # is a correctness rule of the reliable tier, but a caller
-        # passing eager=False deserves a runtime signal
-        warnings.warn(
-            "truncate_lineage: eager=False is ignored on the reliable "
-            "(checkpoint_dir) tier — the checkpoint always materializes "
-            "eagerly under the module lock so the global checkpoint dir "
-            "cannot be rebound before the write",
-            stacklevel=2,
-        )
-    sc = df.sparkSession.sparkContext
-    # respect a cache the CALLER established: persisting is a no-op on
-    # an already-persisted frame, but the paired unpersist would evict
-    # the caller's blocks and force full recomputes downstream
-    # (r10 review)
-    already = df.storageLevel.useMemory or df.storageLevel.useDisk
-    if not already:
-        df.persist()
-    try:
-        with _RELIABLE_CHECKPOINT_LOCK:
-            sc.setCheckpointDir(checkpoint_dir)
-            return df.checkpoint(eager=True)
-    finally:
-        if not already:
-            df.unpersist()
-
-
 def stage_fn(audit: list | None):
     """The composed-pipeline stage-store seam (ONE definition, r17
     review): capture the pre-materialization extended plan when
-    auditing, then lineage-truncate (Spark re-expands common subplans,
-    and every stage fans into 2-3 consumers).  Shared by the corpus
-    capstone/release (curation) and the behavioral pipeline."""
+    auditing, then :func:`~..functions.core.cut` under the stage's
+    name (Spark re-expands common subplans, and every stage fans into
+    2-3 consumers).  Shared by the corpus capstone/release (curation)
+    and the behavioral pipeline."""
 
     def _stage(df: DataFrame, name: str) -> DataFrame:
         if audit is not None:
             audit.append((name, df._jdf.queryExecution().explainString(
                 df.sparkSession._jvm.org.apache.spark.sql.execution
                 .ExplainMode.fromString("extended"))))
-        return truncate_lineage(df, None)
+        return cut(df, name)
 
     return _stage
 
@@ -413,10 +344,11 @@ def ngram_jaccard_pairs(
     # (r8 review); the checkpoint is (id, band, band_hash, size, min)
     # rows — 8 per doc, compact.
     wb = Window.partitionBy("band", "band_hash")
-    sized = (
+    # kept, sf0.1 cut -> none: 17.14 -> 6.23 MB read, 1.75 -> 3.08 MB shuffled
+    sized = cut(
         cand.withColumn("__bsize", F.count(F.lit(1)).over(wb))
-        .withColumn("__bmin", F.min(id_col).over(wb))
-        .localCheckpoint(eager=True)
+        .withColumn("__bmin", F.min(id_col).over(wb)),
+        "dedup.ngram_jaccard_pairs.sized",
     )
     # Degradation is silent recall loss without a signal (ADVICE r8):
     # tell the caller when any bucket actually degraded.  One scalar
@@ -479,9 +411,12 @@ def ngram_jaccard_pairs(
     )
     # spread before the shingle HOF (r17, guide §2.5): the semi-join
     # broadcasts, so a local single-file scan keeps ONE partition and
-    # the interpreted shingle transform ran on one core; no-op at scale
+    # the interpreted shingle transform ran on one core; no-op at scale.
+    # Spread the scan side, not the join: the broadcast keeps the
+    # stream side's partitioning, and counting a join's partitions
+    # would run its exchanges as jobs.
     base = (
-        spread_for_compute(df.join(involved, id_col, "left_semi"))
+        spread_for_compute(df).join(involved, id_col, "left_semi")
         .select(F.col(id_col), shingle_set.alias("__shingles"))
         # consumed by BOTH sides of the verify join below; cached so the
         # semi-join + interpreted shingle HOF run once, not twice.
@@ -647,7 +582,7 @@ def connected_components(
     local blocks by default (fast, but lost with an executor — fine
     single-JVM); pass a fault-tolerant path to switch every round to
     a RELIABLE checkpoint so a 1000-executor run survives executor
-    loss mid-loop (see :func:`truncate_lineage`).
+    loss mid-loop (see :func:`~..functions.core.cut`).
 
     ``driver_tier`` (r17): integral-keyed, NULL-free graphs at or
     under ``_CC_DRIVER_TIER_MAX_EDGES`` edges run an exact numpy
@@ -718,7 +653,10 @@ def connected_components(
     # (the first iteration materializes it anyway), and on the reliable
     # tier eager is mandatory — passing False here would now trip the
     # coercion UserWarning on every checkpoint_dir run (r12 review)
-    labels = truncate_lineage(labels, checkpoint_dir, eager=True)
+    labels = cut(
+        labels, "dedup.connected_components.labels",
+        checkpoint_dir=checkpoint_dir,
+    )
     changed = 0
 
     def _propagate(sym, labels):
@@ -788,8 +726,9 @@ def connected_components(
             # convergence count below would cache only the partitions that
             # count touched, and later rounds would re-derive the rest
             # from the doubled lineage.
-            new_labels = truncate_lineage(
-                new_labels, checkpoint_dir, eager=True
+            new_labels = cut(
+                new_labels, "dedup.connected_components.new_labels",
+                checkpoint_dir=checkpoint_dir,
             )
             # Soundness of checking post-jump label vs __old (the label
             # after the round's FIRST propagation): labels decrease
@@ -1019,12 +958,13 @@ def embedding_neardup_lsh(
     # does not dedupe common subplans, so without this the scan + SRP
     # pandas-UDF subtree executed twice.  The checkpoint rows are
     # (id, table, bucket) ints — tables rows/doc, no vectors.
-    bucketed = df.select(
+    # kept, sf0.1 cut -> none: 9.37 -> 3.49 MB read, 3.48 -> 3.48 MB shuffled, 3.51 -> 3.44 s
+    bucketed = cut(df.select(
         F.col(id_col),
         F.posexplode(
             srp_buckets(vec_col, dim=dim, bits=bits, tables=tables, seed=seed)
         ).alias("__table", "__bucket"),
-    ).localCheckpoint(eager=True)
+    ), "dedup.embedding_neardup_lsh.bucketed")
     a, b = bucketed.alias("a"), bucketed.alias("b")
     cand = (
         a.join(
@@ -1135,17 +1075,8 @@ def semantic_dedup(
     with_vec = df.withColumn(
         "__v", array_to_vector(F.col(vec_col).cast("array<double>"))
     )
-    # materialize the vectorized corpus ONCE before the fit (r18, the
-    # r17 IVF-fit precedent, guide §5): MLlib's Lloyd loop re-evaluates
-    # its input per pass and the model.transform below consumes it
-    # again — without the cut the scan + cast + array_to_vector chain
-    # runs maxIter+1 times.  fit() is already eager at this seam (the
-    # operator trains at construction), so an eager cut adds no job.
-    # The store holds every input column plus ``__v``, so each embedding
-    # sits in executor storage TWICE (array + vector) until the
-    # caller's action completes; checkpointing only (id, __v) would
-    # halve that at the cost of a join back to the original columns.
-    with_vec = with_vec.localCheckpoint(eager=True)
+    # MLlib's Lloyd loop persists an uncached input itself (a cut here
+    # measured slower at 10x and read more bytes; SCALE.md "Lineage cuts")
     km = KMeans(
         k=n_cells, seed=seed, maxIter=8, featuresCol="__v", predictionCol="__cell"
     )
@@ -1267,12 +1198,14 @@ def q_dedup_semantic_portable(spark, sf_dir):
 
     ensure_engine_conf(spark)
     emb = scan(spark, sf_dir, "embeddings")
-    # materialize shared relations once — Spark does not dedupe common
-    # subplans (the pq_topk lesson), and cells/comps each feed two join
-    # sides; both are compact scaled-int relations
-    cells = srp_portable_buckets(
+    # materialize the bucket relation once — Spark does not dedupe
+    # common subplans (the pq_topk lesson), and cells feeds both sides
+    # of the bucket self-join; compact scaled-int rows
+    # kept, sf0.1 cut -> none: 36.27 -> 35.90 MB read, 0.57 -> 0.57 MB shuffled,
+    # 1.87 -> 1.77 s
+    cells = cut(srp_portable_buckets(
         emb, id_col="vec_id", vec_col="embedding", tables=1, bits=6,
-    ).localCheckpoint(eager=True)
+    ), "dedup.q_dedup_semantic_portable.cells")
     pairs = (
         cells.select(F.col("vec_id").alias("ia"), "t", "bucket")
         .join(
@@ -1282,9 +1215,7 @@ def q_dedup_semantic_portable(spark, sf_dir):
         .filter(F.col("ia") < F.col("ib"))
         .select("ia", "ib")
     )
-    comps = embedding_comps(
-        emb, id_col="vec_id", vec_col="embedding"
-    ).localCheckpoint(eager=True)
+    comps = embedding_comps(emb, id_col="vec_id", vec_col="embedding")
     norms = comps.groupBy("vec_id").agg(
         F.sum(F.col("v6") * F.col("v6")).alias("n12")
     )
@@ -1760,10 +1691,11 @@ def _portable_scored_pairs(d: DataFrame) -> DataFrame:
     from artemia_airflow_spark.operators.curation import word_ngrams
 
     banded = _minhash_portable_bands(d, "text", "doc_id")
-    pairs = (
+    # kept, sf0.1 cut -> none: 81.68 -> 80.98 MB read, 2.10 -> 3.20 MB shuffled
+    pairs = cut(
         _bucket_star_pairs(banded, "doc_id")
-        .withColumnsRenamed({"src": "a", "dst": "bdoc"})
-        .localCheckpoint(eager=True)
+        .withColumnsRenamed({"src": "a", "dst": "bdoc"}),
+        "dedup._portable_scored_pairs.pairs",
     )
     pair_docs = (
         pairs.select(F.col("a").alias("doc_id"))
@@ -1773,14 +1705,16 @@ def _portable_scored_pairs(d: DataFrame) -> DataFrame:
     # spread before the gram HOF/explode (r17, guide §2.5): the
     # semi-join is a broadcast, so a local single-file scan stays at
     # ONE partition and the CPU-bound normalize/split/concat gramming
-    # ran on one core; no-op at scale (thousands of input splits)
-    g = (
-        spread_for_compute(d.join(pair_docs, "doc_id", "left_semi"))
+    # ran on one core; no-op at scale (thousands of input splits).
+    # The scan side is spread: the broadcast keeps its partitioning.
+    # kept, sf0.1 cut -> none: 81.68 -> 5.68 MB read, 2.10 -> 2.10 MB shuffled, 3.17 -> 6.02 s
+    g = cut(
+        spread_for_compute(d).join(pair_docs, "doc_id", "left_semi")
         .select(
             "doc_id",
             F.explode(F.array_distinct(word_ngrams("text", 3))).alias("gram"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "dedup._portable_scored_pairs.g",
     )
     gsize = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     ga = g.select(F.col("doc_id").alias("a"), "gram")
@@ -1945,7 +1879,10 @@ def incremental_exact_dedup(
     if state is not None:
         seen = state.snapshot().select(F.col("h").alias("__h"))
         batch_keep = batch_keep.join(seen, "__h", "left_anti")
-    survivors = truncate_lineage(batch_keep, checkpoint_dir, eager=True)
+    survivors = cut(
+        batch_keep, "dedup.incremental_exact_dedup.survivors",
+        checkpoint_dir=checkpoint_dir,
+    )
     new_hashes = survivors.select(F.col("__h").alias("h")).distinct()
     if state is None:
         TxTable.create(spark, new_hashes, state_root, key_col="h")
@@ -2076,7 +2013,10 @@ def incremental_minhash_dedup(
             .distinct()
         )
         batch_keep = batch_keep.join(hit, id_col, "left_anti")
-    survivors = truncate_lineage(batch_keep, checkpoint_dir, eager=True)
+    survivors = cut(
+        batch_keep, "dedup.incremental_minhash_dedup.survivors",
+        checkpoint_dir=checkpoint_dir,
+    )
     new_buckets = (
         survivors.select(F.explode("__bks").alias("bk")).distinct()
     )
@@ -2157,7 +2097,9 @@ def cross_source_matrix(
     # relation — an eager cut would run the corpus job (and fire the
     # max_bucket guard) at plan-construction time, not at the
     # caller's action.
-    banded = banded.localCheckpoint(eager=False)
+    # kept, sf0.1 cut -> none: 18.03 -> 17.19 MB read, 16.98 -> 16.98 MB shuffled,
+    # 3.85 -> 3.91 s
+    banded = cut(banded, "dedup.cross_source_matrix.banded", eager=False)
     a, x = banded.alias("a"), banded.alias("x")
     pairs = (
         a.join(x, ["b", "bv"])
@@ -2275,14 +2217,9 @@ def q_dedup_threshold_sweep(spark, sf_dir):
     thr = F.explode(F.array(F.lit(60), F.lit(80), F.lit(95))).alias(
         "threshold_pct"
     )
-    ok = (
-        scored.select("a", "bdoc", "i", "na", "nb", thr)
-        .filter(
-            100 * F.col("i")
-            >= F.col("threshold_pct")
-            * (F.col("na") + F.col("nb") - F.col("i"))
-        )
-        .localCheckpoint(eager=True)  # two tiny consumers below
+    ok = scored.select("a", "bdoc", "i", "na", "nb", thr).filter(
+        100 * F.col("i")
+        >= F.col("threshold_pct") * (F.col("na") + F.col("nb") - F.col("i"))
     )
     pair_counts = ok.groupBy("threshold_pct").agg(
         F.count(F.lit(1)).alias("n_pairs")

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from artemia_airflow_spark.catalog import scan
+from artemia_airflow_spark.functions.core import cut
 from artemia_airflow_spark.operators.similarity import (
     _bounded_topk,
     _portable_exact_rerank,
@@ -78,9 +79,10 @@ def bm25_topk(
     # standard shape (a stage store on a cluster).  LAZY checkpoint:
     # the first consumer's job materializes it in-flight (no separate
     # eager job), the second reads the persisted blocks.
-    tf_base = toks.groupBy(id_col, "__term").agg(
+    # kept, sf0.1 cut -> none: 14.92 -> 4.45 MB read, 3.23 -> 4.37 MB shuffled
+    tf_base = cut(toks.groupBy(id_col, "__term").agg(
         F.count(F.lit(1)).alias("tf")
-    ).localCheckpoint(eager=False)
+    ), "retrieval.bm25_topk.tf_base", eager=False)
     # doc frequency from the tf relation (one row per (doc, term)
     # already) — a separate toks.distinct() would re-tokenize the
     # whole corpus with a DIFFERENT partial aggregate, defeating
@@ -321,13 +323,7 @@ def q_retrieval_rrf(spark, sf_dir):
         d, qterms, text_col="text", id_col="doc_id",
         query_id_col="query_id", term_col="term", k=50,
     ).select("query_id", "doc_id", "rank")
-    # materialize the exploded components once (r17b): the exact-rerank
-    # vector arm consumes comps from four lineage branches and the
-    # posexplode re-ran per branch (6 embeddings scans in the static
-    # plan)
-    comps = embedding_comps(
-        emb, id_col="vec_id", vec_col="embedding"
-    ).localCheckpoint(eager=True)
+    comps = embedding_comps(emb, id_col="vec_id", vec_col="embedding")
     probes = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("probe_id")
     )
@@ -551,13 +547,7 @@ def q_retrieval_mmr(spark, sf_dir):
     the oracle's unrolled CTE chain replays the same recurrence."""
     ensure_engine_conf(spark)
     emb = scan(spark, sf_dir, "embeddings")
-    # materialize the exploded components ONCE (r17b, guide §3.3/§5):
-    # this face consumes comps from SIX lineage branches (the rerank's
-    # norms/dots/probe sides, ci, cj, norms) and Spark re-expands
-    # common subplans — the static plan held 22 embeddings scans
-    comps = embedding_comps(
-        emb, id_col="vec_id", vec_col="embedding"
-    ).localCheckpoint(eager=True)
+    comps = embedding_comps(emb, id_col="vec_id", vec_col="embedding")
     probes = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("probe_id")
     )
@@ -566,9 +556,11 @@ def q_retrieval_mmr(spark, sf_dir):
     # the bounded top-20 relevance relation feeds THREE consumers (both
     # sides of the candidate-pair self-join + the MMR rel input);
     # without the cut the whole windowed rerank re-executes per branch
-    rel = _portable_exact_rerank(comps, cand_all, k=20).select(
+    # kept, sf0.1 cut -> none: 94.56 -> 70.92 MB read, 0.20 -> 0.11 MB shuffled,
+    # 1.32 -> 1.18 s
+    rel = cut(_portable_exact_rerank(comps, cand_all, k=20).select(
         "probe_id", "vec_id", F.col("cos_e6").alias("rel_e6")
-    ).localCheckpoint(eager=True)
+    ), "retrieval.q_retrieval_mmr.rel")
     pair_ids = rel.select("probe_id", F.col("vec_id").alias("i")).join(
         rel.select("probe_id", F.col("vec_id").alias("j")), "probe_id"
     ).filter(F.col("i") != F.col("j"))

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from artemia_airflow_spark.catalog import scan
+from artemia_airflow_spark.functions.core import cut
 from artemia_airflow_spark.plans.registry import declared
 from artemia_airflow_spark.session import ensure_engine_conf
 
@@ -86,14 +87,15 @@ def dsir_weights(
     # pushed isnotnull(bucket) join-key filter breaks subtree
     # identity, so exchange reuse never fires and the corpus would
     # tokenize twice)
-    db = (
+    # kept, sf0.1 cut -> none: 74.64 -> 10.30 MB read, 5.28 -> 9.44 MB shuffled
+    db = cut(
         rows.select(
             id_col, "__t",
             F.substring(F.md5(F.col("__feat")), 1, 2).alias("bucket"),
         )
         .groupBy(id_col, "__t", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        "selection.dsir_weights.db",
     )
     bs = db.groupBy("bucket").agg(
         F.sum("cnt").alias("cr"),
@@ -467,10 +469,12 @@ def classifier_scores(
     # one exchange: distinct (doc, bucket) presence, <= 256 rows/doc —
     # materialized so bs and the join-back share one tokenize pass
     # (the dsir_weights rationale)
-    db = rows.select(
+    # kept, sf0.1 cut -> none: 64.88 -> 16.45 MB read, 5.45 -> 5.45 MB shuffled,
+    # 3.41 -> 3.92 s
+    db = cut(rows.select(
         id_col, "__t",
         F.substring(F.md5(F.col("__feat")), 1, 2).alias("bucket"),
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct(), "selection.classifier_scores.db")
     bs = db.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_all"),
         F.sum(F.when(F.col("__t"), 1).otherwise(0)).cast("bigint")
@@ -740,24 +744,20 @@ def token_budget_select(
     finding).  Callers with empty documents filter or floor them
     upstream.
     """
-    from artemia_airflow_spark.operators.dedup import truncate_lineage
-
     if not isinstance(budget_tokens, DataFrame):
         budget_tokens = (
             df.sparkSession.range(1)
             .select(F.lit(int(budget_tokens)).alias("__budget"))
         )
-    # every tiny relation is lineage-truncated: Spark re-expands shared
-    # subplans into each consumer, and this operator fans the corpus
-    # into THREE consumers — without the cuts the static plan held 10
-    # corpus scans (stats/budget/threshold lineage re-entering full and
-    # boundary multiplicatively); with them it holds one per consumer
-    budget = truncate_lineage(
-        budget_tokens.select(
-            F.col(budget_tokens.columns[0]).cast("bigint")
-            .alias("__budget")
-        ),
-        None,
+    # the tiny stats and threshold relations are lineage-truncated:
+    # Spark re-expands shared subplans into each consumer, and this
+    # operator fans the corpus into THREE consumers — without the cuts
+    # the static plan held 10 corpus scans (stats/threshold lineage
+    # re-entering full and boundary multiplicatively); with them it
+    # holds one per consumer.  The one-row budget needs no cut
+    # (sf0.1 and 100x ablation, SCALE.md "Lineage cuts").
+    budget = budget_tokens.select(
+        F.col(budget_tokens.columns[0]).cast("bigint").alias("__budget")
     )
     df = df.withColumn(
         tokens_col,
@@ -775,11 +775,12 @@ def token_budget_select(
         ).otherwise(F.col(tokens_col)),
     )
     nb = _N_BUDGET_BINS
-    stats = truncate_lineage(
+    # kept, sf0.1 cut -> none: 0.03 -> 0.04 MB read, 0.02 -> 0.02 MB shuffled
+    stats = cut(
         df.agg(
             F.min(score_col).alias("__mn"), F.max(score_col).alias("__mx")
         ),
-        None,
+        "selection.token_budget_select.stats",
     )
     binned = df.crossJoin(F.broadcast(stats)).withColumn(
         "__bin",
@@ -798,7 +799,8 @@ def token_budget_select(
     # threshold bin: the LOWEST bin whose strictly-above mass still
     # leaves budget — bins above it are consumed whole, bins below it
     # start past the budget; the boundary window spends the remainder
-    thr = truncate_lineage(
+    # kept, sf0.1 cut -> none: 0.03 -> 0.04 MB read, 0.02 -> 0.02 MB shuffled
+    thr = cut(
         cum.filter(F.col("__above") < F.col("__budget"))
         .orderBy(F.col("__bin").asc())
         .limit(1)
@@ -806,7 +808,7 @@ def token_budget_select(
             F.col("__bin").alias("__tbin"),
             (F.col("__budget") - F.col("__above")).alias("__rem"),
         ),
-        None,
+        "selection.token_budget_select.thr",
     )
     tagged = binned.crossJoin(F.broadcast(thr))
     full = tagged.filter(F.col("__bin") > F.col("__tbin"))

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from artemia_airflow_spark.catalog import scan
-from artemia_airflow_spark.functions.core import guarded_e6_ratio, overlap
+from artemia_airflow_spark.functions.core import cut, guarded_e6_ratio, overlap
 from artemia_airflow_spark.functions.vectors import cosine_similarity
 from artemia_airflow_spark.plans.registry import declared
 from artemia_airflow_spark.session import ensure_engine_conf
@@ -142,7 +142,8 @@ def lsh_topk(
     (one block set, cheap rerun); do NOT copy this pattern for
     relations whose loss would be expensive.
     """
-    probes = probes.localCheckpoint(eager=True)
+    # kept, sf0.1 cut -> none: 0.24 -> 0.31 MB read, 0.03 -> 0.03 MB shuffled
+    probes = cut(probes, "similarity.lsh_topk.probes")
     buckets = dict(dim=dim, bits=bits, tables=tables, seed=seed)
     ce = corpus.select(
         id_col,
@@ -410,9 +411,11 @@ def q_sim_ann_lsh_portable(spark, sf_dir):
     # consumed twice (corpus/probe sides of the self-join) while comps
     # feeds norms + both dot-product sides; both are compact
     # (N x tables and N x dim scaled-int rows, no text/vectors)
-    buckets = srp_portable_buckets(
+    # kept, sf0.1 cut -> none: 47.87 -> 47.27 MB read, 0.03 -> 0.03 MB shuffled,
+    # 0.73 -> 0.91 s
+    buckets = cut(srp_portable_buckets(
         emb, id_col="vec_id", vec_col="embedding"
-    ).localCheckpoint(eager=True)
+    ), "similarity.q_sim_ann_lsh_portable.buckets")
     corpus_b = buckets.filter(F.col("vec_id") >= 5)
     probe_b = (
         buckets.filter(F.col("vec_id") < 5)
@@ -423,9 +426,10 @@ def q_sim_ann_lsh_portable(spark, sf_dir):
         .select("probe_id", "vec_id")
         .distinct()
     )
-    comps = embedding_comps(
+    # kept, sf0.1 cut -> none: 47.87 -> 1.04 MB read, 0.03 -> 0.03 MB shuffled, 0.73 -> 0.88 s
+    comps = cut(embedding_comps(
         emb, id_col="vec_id", vec_col="embedding"
-    ).localCheckpoint(eager=True)
+    ), "similarity.q_sim_ann_lsh_portable.comps")
     # shared rerank tail (r12): one implementation across the three
     # portable ANN twins, so a rerank fix can never silently diverge
     return _portable_exact_rerank(comps, cand, k=10)
@@ -936,9 +940,10 @@ def q_sim_pq_portable(spark, sf_dir):
     )
     # comps feeds encode + LUTs + rerank dots/norms: materialize ONCE
     # (compact scaled-int rows; Spark does not dedupe common subplans)
-    comps = embedding_comps(
+    # kept, sf0.1 cut -> none: 64.23 -> 5.49 MB read, 5.33 -> 5.33 MB shuffled, 1.73 -> 1.47 s
+    comps = cut(embedding_comps(
         emb, id_col="vec_id", vec_col="embedding"
-    ).localCheckpoint(eager=True)
+    ), "similarity.q_sim_pq_portable.comps")
     split = comps.select(
         "vec_id",
         F.expr("d div 8").cast("bigint").alias("j"),
@@ -1167,9 +1172,10 @@ def _ivf_pq_portable_frames(spark, sf_dir):
     persisted-index twin cannot drift from the in-plan twin (their
     hash-match equivalence is the persistence proof)."""
     emb = scan(spark, sf_dir, "embeddings")
-    comps = embedding_comps(
+    # kept, sf0.1 cut -> none: 64.66 -> 5.92 MB read, 2.39 -> 2.39 MB shuffled, 5.29 -> 4.71 s
+    comps = cut(embedding_comps(
         emb, id_col="vec_id", vec_col="embedding"
-    ).localCheckpoint(eager=True)
+    ), "similarity._ivf_pq_portable_frames.comps")
     corp = comps.filter(F.col("vec_id") >= 5)
     probe = comps.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("probe_id"), "d", F.col("v6").alias("p6")
@@ -1478,12 +1484,14 @@ def ivf_topk(
     # vector_to_array (exact: float->double widening then a lossless
     # vector roundtrip; cosine_similarity folds in double either way),
     # so the checkpoint does not hold the embedding bytes twice.
-    corpus_v = (
+    # kept, sf0.1 cut -> none: 22.98 -> 17.06 MB read, 0.07 -> 0.07 MB shuffled,
+    # 1.41 -> 1.51 s
+    corpus_v = cut(
         corpus.withColumn(
             "__v", array_to_vector(F.col(vec_col).cast("array<double>"))
         )
-        .select(id_col, "__v")
-        .localCheckpoint(eager=True)
+        .select(id_col, "__v"),
+        "similarity.ivf_topk.corpus_v",
     )
     # a coarse quantizer only needs rough cells — a few Lloyd rounds;
     # extra iterations buy recall nothing once cells are stable-ish
@@ -2077,10 +2085,12 @@ def ivf_pq_topk(
     # this the l2norm UDF subtree re-executes for model.transform and
     # again for every downstream consumer of `resid` below.  Projected
     # to (id, __nv, __v) so the checkpoint carries no corpus payload.
-    corpus_v = (
+    # kept, sf0.1 cut -> none: 30.51 -> 19.49 MB read, 0.08 -> 0.08 MB shuffled,
+    # 2.78 -> 3.81 s
+    corpus_v = cut(
         corpus_n.withColumn("__v", array_to_vector(F.col("__nv")))
-        .select(id_col, "__nv", "__v")
-        .localCheckpoint(eager=True)
+        .select(id_col, "__nv", "__v"),
+        "similarity.ivf_pq_topk.corpus_v",
     )
     km = KMeans(k=n_cells, seed=seed, maxIter=8, featuresCol="__v",
                 predictionCol="__cell")
@@ -2105,10 +2115,12 @@ def ivf_pq_topk(
     # pq_codebooks (training-sample collect) and pq_encode, and Spark
     # does not dedupe common subplans — without this the KMeans
     # transform + residual UDF ran once per consumer.
-    resid = (
+    # kept, sf0.1 cut -> none: 30.51 -> 30.41 MB read, 0.08 -> 0.08 MB shuffled,
+    # 2.78 -> 3.09 s
+    resid = cut(
         assigned.withColumn("__r", residual(F.col("__nv"), F.col("__cell")))
-        .select(id_col, "__cell", "__r")
-        .localCheckpoint(eager=True)
+        .select(id_col, "__cell", "__r"),
+        "similarity.ivf_pq_topk.resid",
     )
     books = pq_codebooks(
         resid.select(F.col("__r").alias(vec_col), F.col(id_col)),
@@ -2517,7 +2529,8 @@ def index_upsert_changes(
     # its changes twice — the touched-file key probe and the rewrite —
     # and without this the whole multi-exchange encode pipeline
     # re-executes per pass (2x per micro-batch in the streaming loop)
-    return changes.localCheckpoint(eager=True)
+    # kept, sf0.1 cut -> none: 120.72 -> 143.43 MB read, 1.69 -> 2.09 MB shuffled
+    return cut(changes, "similarity.index_upsert_changes.changes")
 
 
 @declared("q_index_upsert_portable", oracle=_IVF_PQ_PORTABLE_ORACLE)
@@ -2745,13 +2758,6 @@ def stream_index_maintenance(
         # than the previous probe and the membership test never copies
         # the known set, so a long drain's skip checks stay constant
         # per micro-batch.
-        #
-        # Materialize the micro-batch once (r17, guide §5): the corpus
-        # MERGE consumes it twice (touched-file probe + rewrite) and
-        # the index path reads it twice more (increment encode +
-        # tombstone split) — without this the batch source re-reads
-        # per consumer.
-        batch_df = batch_df.localCheckpoint(eager=True)
         stamp = {"sink_id": sink_id, "batch_id": int(batch_id)}
 
         def commit_corpus() -> None:
@@ -3032,9 +3038,10 @@ def _kmeans_portable_assign(spark, sf_dir, *, n_cells: int = 8):
     face cannot drift from the clustering face it claims to stratify
     by (the persisted-index-twin precedent)."""
     emb = scan(spark, sf_dir, "embeddings")
-    comps = embedding_comps(
+    # kept: tests/test_plans.py::test_kmeans_iterations_run_on_checkpointed_comps pins it
+    comps = cut(embedding_comps(
         emb, id_col="vec_id", vec_col="embedding"
-    ).localCheckpoint(eager=True)
+    ), "similarity._kmeans_portable_assign.comps")
     cents = ivf_portable_centroids_df(spark, n_cells=n_cells, dim=64)
     for _ in range(2):
         # checkpoint the k x dim centroid relation after EVERY
@@ -3043,9 +3050,9 @@ def _kmeans_portable_assign(spark, sf_dir, *, n_cells: int = 8):
         # a lazily-chained loop re-executes the previous iteration's
         # corpus-sized aggregations once per consumer — the checkpoint
         # is 512 rows, the saved recompute is two comps-sized aggs
-        cents = kmeans_portable_iterate(
+        cents = cut(kmeans_portable_iterate(
             comps, cents, n_cells=n_cells
-        ).localCheckpoint(eager=True)
+        ), "similarity._kmeans_portable_assign.cents")
     fin = _nearest_cells(comps, cents, n_cells=n_cells, packed=True)
     return cents, fin
 
@@ -3203,16 +3210,7 @@ def centroid_drift_matrix(
         .groupBy("__lbl")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    # materialize the bounded (labels x dims) centroid stats once
-    # (r17b, guide §3.3/§5): BOTH sides of the pair self-join consume
-    # cents, and Spark re-expands common subplans — without the cut the
-    # corpus-sized component-sum aggregate executed twice (6 embeddings
-    # scans in the static plan).  LAZY (review finding): a library
-    # operator must stay a lazy relation — the first action
-    # materializes it in-flight, not the constructor.
-    cents = sums.join(F.broadcast(counts), "__lbl").localCheckpoint(
-        eager=False
-    )
+    cents = sums.join(F.broadcast(counts), "__lbl")
     a = cents.select(
         F.col("__lbl").alias("label_a"), "d",
         F.col("s").alias("sa"), F.col("n").alias("na"),
@@ -3329,19 +3327,18 @@ def embedding_outliers(
     few; skewed label sizes cost one window task each, the documented
     behavioral-face trade).
     """
-    from artemia_airflow_spark.operators.dedup import truncate_lineage
-
     comps = embedding_comps(emb, id_col=id_col, vec_col=vec_col)
     labeled = comps.join(
         emb.select(F.col(id_col), F.col(label_col).alias("__lbl")),
         id_col,
     )
-    stats = truncate_lineage(
+    # kept: tests/test_plans.py::test_r15_panel_faces_single_scan_no_corpus_join pins it
+    stats = cut(
         labeled.groupBy("__lbl", "d").agg(
             F.sum("v6").alias("s"),
             F.count(F.lit(1)).alias("n"),
         ),
-        None,
+        "similarity.embedding_outliers.stats",
     )
     diff = F.expr("CAST(CAST(v6 AS DECIMAL(20,0)) * n - s AS DECIMAL(19,0))")
     scored = (
@@ -3507,13 +3504,6 @@ def triplet_mining(
         )
         .withColumn("__score", -F.col("__dist"))
     )
-    # the positive and negative argmins are two consumers of d2 and
-    # Spark never dedupes common subplans (r15 review: without the cut
-    # the |anchors| x corpus distance aggregate executed twice)
-    from artemia_airflow_spark.operators.dedup import truncate_lineage
-
-    d2 = truncate_lineage(d2, None)
-
     def argmin(side: DataFrame) -> DataFrame:
         cut = _grouped_partial_topk(
             side, probe_id_col="__aid", id_col=id_col,

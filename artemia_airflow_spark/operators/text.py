@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from artemia_airflow_spark.catalog import scan
 from artemia_airflow_spark.functions.core import (
+    cut,
     guarded_e6_ratio,
     spread_for_compute,
 )
@@ -225,16 +226,13 @@ def langid_quality(
     rationals.
 
     Scale shape: one corpus scan into the (lang, pred) confusion
-    aggregate (≤ |langs|² rows, map-side combined, lineage-truncated
-    once); everything after is margin arithmetic on that tiny frame.
+    aggregate (≤ |langs|² rows, map-side combined); everything after
+    is margin arithmetic on that tiny frame.
     """
-    from artemia_airflow_spark.operators.dedup import truncate_lineage
-
-    conf = truncate_lineage(
+    conf = (
         language_id(df, text_col)
         .groupBy(F.col(label_col).alias("lang"), "lang_pred")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n")),
-        None,
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
     rows = conf.groupBy("lang").agg(
         F.sum("n").cast("bigint").alias("n_true"),
@@ -1401,18 +1399,17 @@ def vocabulary_coverage(
 
     Returns one row per N: (n_vocab, covered_tokens, coverage_e6).
     """
-    from artemia_airflow_spark.operators.dedup import truncate_lineage
-
     sizes = sorted(set(int(n) for n in vocab_sizes))
     if not sizes or sizes[0] < 1:
         raise ValueError(f"vocab_sizes must be positive, got {vocab_sizes}")
-    counts = truncate_lineage(
+    # kept, sf0.1 cut -> none: 0.01 -> 0.01 MB read, 0.00 -> 0.00 MB shuffled, 0.33 -> 0.37 s
+    counts = cut(
         df.select(F.explode(F.split(F.lower(F.col(text_col)), r"\s+"))
                   .alias("token"))
         .where(F.col("token") != "")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n")),
-        None,
+        "text.vocabulary_coverage.counts",
     )
     total = counts.agg(F.sum("n").alias("__total"))
     top = counts.orderBy(F.col("n").desc(), F.col("token")).limit(sizes[-1])
@@ -1501,13 +1498,12 @@ def agreement_kappa(
     aggregate (map-side combined); margins, S, and the kappa row are
     label-grain arithmetic on the lineage-truncated confusion.
     """
-    from artemia_airflow_spark.operators.dedup import truncate_lineage
-
-    conf = truncate_lineage(
+    # kept, sf0.1 cut -> none: 0.01 -> 0.01 MB read, 0.00 -> 0.00 MB shuffled
+    conf = cut(
         df.groupBy(
             F.col(label_col).alias("__a"), F.col(pred_col).alias("__b")
         ).agg(F.count(F.lit(1)).cast("bigint").alias("__n")),
-        None,
+        "text.agreement_kappa.conf",
     )
     rows = conf.groupBy(F.col("__a").alias("__k")).agg(
         F.sum("__n").cast("bigint").alias("__r")

@@ -25,6 +25,7 @@ reference's fan-out at dags/update_tr_from_ex_dag.py:154.
 
 from __future__ import annotations
 
+import ctypes
 import functools
 import threading
 import time
@@ -1224,12 +1225,13 @@ class Pipeline:
         pinned-thread mode maps the Python thread to one JVM thread,
         so the group covers exactly this attempt's jobs, including
         those its ``overlap`` side threads submit); on deadline
-        the group is cancelled (AndFutureJobs, so Spark work the
-        zombie submits later dies too) — a hung Spark action then
-        aborts executor-side — and StageTimeout raises in the runner.
-        A pure-Python hang cannot be force-killed (CPython), so its
-        thread is left as a daemon; the PIPELINE regains the slot
-        either way, which is the contract that matters.
+        the group is cancelled (AndFutureJobs) — a hung Spark action
+        then aborts executor-side — StageTimeout is raised in the
+        attempt thread at its next Python bytecode (AQE's query-stage
+        jobs submitted later escape the group cancel; test-pinned), and
+        StageTimeout raises in the runner.  A thread blocked in one C
+        call runs on until it returns, as a daemon; the PIPELINE
+        regains the slot either way, which is the contract that matters.
 
         CONSEQUENCE when composed with RetryPolicy (r10 review): a
         retry after a timeout may overlap a zombie attempt still
@@ -1286,7 +1288,11 @@ class Pipeline:
                         sc.cancelJobGroup(group)
                     except Exception:  # noqa: BLE001
                         pass
-            # the thread survives the "kill" if it is in pure Python —
+            # AQE's query-stage jobs escape the group cancel: raise in
+            # the zombie at its next Python bytecode, before its next action
+            ctypes.pythonapi.PyThreadState_SetAsyncExc(
+                ctypes.c_ulong(th.ident), ctypes.py_object(StageTimeout))
+            # the thread survives the "kill" while blocked in a C call —
             # record it so the pile of concurrent zombies is observable
             # on the stage's final result (ADVICE r10)
             self._zombies.setdefault(stage.task_id, []).append(th)

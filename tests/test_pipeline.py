@@ -1428,6 +1428,36 @@ def test_execution_timeout_cancels_overlap_side_thread_jobs(spark):
     assert tracker.getActiveJobsIds() == []
 
 
+def test_execution_timeout_stops_aqe_stage_jobs_submitted_after_the_cancel(spark):
+    """A zombie attempt that first touches Spark after its deadline gets
+    no job of its group through.  AQE submits each shuffle stage as its
+    own job, and a group cancel-and-future-jobs alone let those run."""
+    import time as _time
+
+    seen = {}
+    finished = threading.Event()
+
+    def late(ctx):
+        seen["group"] = ctx.spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+        try:
+            _time.sleep(2.0)
+            return ctx.spark.range(0, 1000, 1, 4).repartition(4).count()
+        finally:
+            finished.set()
+
+    pipe = Pipeline("exec-timeout-aqe")
+    pipe.add(Stage("late", late, execution_timeout_s=0.5))
+    results = pipe.run(spark=spark, raise_on_failure=False)
+    assert results["late"].state == "failed" and results["late"].timed_out
+    assert finished.wait(30.0)
+    tracker = spark.sparkContext.statusTracker()
+    completed = [
+        j for j in tracker.getJobIdsForGroup(seen["group"])
+        if tracker.getJobInfo(j).status == "SUCCEEDED"
+    ]
+    assert completed == []
+
+
 def test_deferrable_sensor_releases_pool_slot_while_waiting():
     """A14 (r10): a deferred sensor holds NO pool slot — a same-pool
     stage runs to completion WHILE the sensor waits, then the trigger
