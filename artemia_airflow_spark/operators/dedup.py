@@ -1054,8 +1054,9 @@ def semantic_dedup(
     policy as the other dedup tiers).
 
     Spark-first composition of parts this engine already has: the IVF
-    coarse quantizer (distributed MLlib KMeans, a few Lloyd rounds)
-    supplies the blocking key, and the blocked
+    coarse quantizer (``similarity.lloyd_centers`` on a capped,
+    id-ordered sample; cells assigned map-side by
+    ``similarity.nearest_cells``) supplies the blocking key, and the blocked
     :func:`embedding_cosine_pairs` tier supplies the within-cell pair
     kernel — each cell's all-pairs space is computed cell-locally in a
     numpy kernel; the shuffle carries (id, vector, cell) rows hash-
@@ -1069,18 +1070,19 @@ def semantic_dedup(
 
     Returns the surviving rows of ``df`` (duplicates removed).
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    from artemia_airflow_spark.operators.similarity import (
+        lloyd_centers,
+        nearest_cells,
+        training_sample,
+    )
 
-    with_vec = df.withColumn(
-        "__v", array_to_vector(F.col(vec_col).cast("array<double>"))
+    centers = lloyd_centers(
+        training_sample(df, vec_col=vec_col, order_col=id_col), n_cells, seed
     )
-    # MLlib's Lloyd loop persists an uncached input itself (a cut here
-    # measured slower at 10x and read more bytes; SCALE.md "Lineage cuts")
-    km = KMeans(
-        k=n_cells, seed=seed, maxIter=8, featuresCol="__v", predictionCol="__cell"
+    bc_centers = df.sparkSession.sparkContext.broadcast(centers)
+    cells = df.withColumn(
+        "__cell", nearest_cells(F.col(vec_col), bc_centers)[0]
     )
-    cells = km.fit(with_vec).transform(with_vec).drop("__v")
     pairs = embedding_cosine_pairs(
         cells, id_col, vec_col, threshold=threshold, blocking_col="__cell"
     )
@@ -1090,7 +1092,8 @@ def semantic_dedup(
 
 @declared("q_dedup_semantic")
 def q_dedup_semantic(spark, sf_dir):
-    """North-star SemDeDup (rows-only: k-means cell boundaries are
+    """North-star SemDeDup (rows-only: the cell boundaries of the
+    driver-side float Lloyd, ``similarity.lloyd_centers``, are
     float-order sensitive, so the exact survivor set is stable only
     per-environment): per-label document counts before/after semantic
     dedup at cosine >= 0.95."""
@@ -1178,8 +1181,9 @@ def q_dedup_semantic_portable(spark, sf_dir):
     Cells come from the md5-derived ±1-plane SRP buckets
     (:func:`~artemia_airflow_spark.operators.similarity
     .srp_portable_buckets`, one table x 6 bits = 64 cells — the
-    deterministic stand-in for the production tier's KMeans, whose
-    float-order-sensitive cell boundaries keep q_dedup_semantic
+    deterministic stand-in for the production tier's trained float
+    k-means cells, ``similarity.lloyd_centers``, whose
+    float-order-sensitive boundaries keep q_dedup_semantic
     rows-only); the within-cell prune is the exact-int cosine of
     q_sim_ann_lsh_portable (integer dot/norms -> correctly-rounded
     IEEE double chain, bit-identical across engines).  Face: per-label

@@ -23,7 +23,7 @@ import random
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from artemia_airflow_spark.catalog import scan
@@ -1443,6 +1443,96 @@ def _ivf_pq_portable_query(
     return _portable_exact_rerank(comps, cand, k=k)
 
 
+def _argnearest(V: "np.ndarray", M: "np.ndarray", n: int) -> "np.ndarray":
+    """Row indices of each row of ``V``'s ``n`` nearest rows of ``M``
+    by squared L2, (distance, index) ascending: (len(V), n) int.  The
+    expanded ``||v||^2 - 2 v.m + ||m||^2`` is one BLAS matmul with
+    O(len(V) x len(M)) memory (the naive (V-M)^2 broadcast is
+    O(len(V) x len(M) x dim)).  The one nearest-centroid kernel of the
+    trained quantizers: Lloyd's assign step, cell assignment, probe
+    routing and PQ encode all call it."""
+    d = (V * V).sum(1)[:, None] - 2.0 * (V @ M.T) + (M * M).sum(1)[None, :]
+    if n == 1:
+        return d.argmin(1)[:, None]  # first minimum: the lowest index
+    return np.argsort(d, axis=1, kind="stable")[:, :n]
+
+
+def nearest_cells(vecs: Column, bc_centers, n: int = 1) -> Column:
+    """array<int> of each vector's ``n`` nearest broadcast centers
+    (:func:`_argnearest` order): an Arrow-batched map-side kernel, so
+    the plan stays constant in the number of centers and no vector is
+    shuffled.  ``n=1`` (take ``[0]``) assigns corpus cells; ``n`` > 1
+    routes probes."""
+
+    @F.pandas_udf("array<int>")
+    def nearest_cells(v: pd.Series) -> pd.Series:
+        if len(v) == 0:
+            return pd.Series([], dtype=object)
+        V = np.stack(v.to_numpy()).astype(np.float64)
+        idx = _argnearest(V, bc_centers.value, n).astype("int32")
+        return pd.Series([row.tolist() for row in idx])
+
+    return nearest_cells(vecs.cast("array<double>"))
+
+
+def training_sample(
+    corpus: DataFrame, *, vec_col: str, order_col: str | None = None,
+    train_cap: int = 4096, normalize: bool = False,
+) -> "np.ndarray":
+    """The trained quantizers' sample: at most ``train_cap`` vectors
+    collected to the driver as a float64 matrix — the FAISS
+    convention: a quantizer is a tiny model (k x dim floats) fit on a
+    bounded sample regardless of corpus size, then broadcast.  This is
+    a bounded model-fit collect, not a data collect.  Pass
+    ``order_col`` to make the sample — and therefore the model —
+    independent of partition layout (a bare limit() takes whichever
+    partitions answer first); ``normalize=True`` L2-normalizes the rows
+    for callers that quantize the unit sphere."""
+    src = corpus.select(vec_col, *([order_col] if order_col else []))
+    if order_col:
+        src = src.orderBy(order_col)
+    rows = [
+        list(map(float, r[0]))
+        for r in src.select(vec_col).limit(train_cap).collect()
+    ]
+    sample = np.array(rows, dtype=np.float64).reshape(len(rows), -1 if rows else 0)
+    if normalize:
+        sample /= np.maximum(
+            np.linalg.norm(sample, axis=1, keepdims=True), 1e-12
+        )
+    return sample
+
+
+def lloyd_centers(
+    sample: "np.ndarray", k: int, seed: "int | np.random.RandomState",
+) -> "np.ndarray":
+    """The engine's one trained quantizer: ``k`` k-means centers of
+    ``sample`` (rows) by Lloyd's algorithm on the driver.  The init
+    picks k distinct sample rows with ``RandomState(seed)`` (or with
+    ``seed`` itself when it is a ``RandomState``, so several fits can
+    draw from one stream); 8 rounds follow — a coarse quantizer needs
+    stable-ish cells, not convergence — and a center that loses every
+    point keeps its old position.  Raises ``ValueError`` when the
+    sample has fewer than k rows."""
+    if len(sample) < k:
+        raise ValueError(
+            f"k-means training needs >= k ({k}) vectors; "
+            f"the sample has {len(sample)}"
+        )
+    rng = (
+        seed if isinstance(seed, np.random.RandomState)
+        else np.random.RandomState(seed)
+    )
+    centers = sample[rng.choice(len(sample), size=k, replace=False)]
+    for _ in range(8):
+        assign = _argnearest(sample, centers, 1)[:, 0]
+        for c in range(k):
+            pts = sample[assign == c]
+            if len(pts):
+                centers[c] = pts.mean(0)
+    return centers
+
+
 def ivf_topk(
     corpus: DataFrame, probes: DataFrame, *, id_col: str, probe_id_col: str,
     vec_col: str = "embedding", probe_vec_col: str = "probe_vec",
@@ -1451,7 +1541,7 @@ def ivf_topk(
     """Approximate top-k via IVF (inverted-file) coarse quantization —
     the other classic ANN scale path next to LSH.
 
-    Train a KMeans coarse quantizer (MLlib, distributed), assign every
+    Train a k-means coarse quantizer (:func:`lloyd_centers`), assign every
     corpus vector to its nearest centroid (the "cell"), and search each
     probe only in its ``n_probe_cells`` nearest cells.  The candidate
     join is an equi-join on the cell id; exact cosine re-ranks.  At
@@ -1459,7 +1549,8 @@ def ivf_topk(
     cell) and amortized across queries — each query touches
     n_probe_cells/n_cells of the corpus.
 
-    Probe->cell routing is an Arrow-batched pandas-UDF argmin over a
+    Assignment and probe->cell routing are :func:`nearest_cells`, an
+    Arrow-batched pandas-UDF argmin over a
     BROADCAST numpy centroid matrix, not per-cell literal-array
     expressions: the literal form bakes O(n_cells x dim) constants
     into the plan, which at production quantizer sizes (4k+ cells)
@@ -1474,63 +1565,19 @@ def ivf_topk(
     EXCLUDED from the top-k; count them via
     :func:`nonfinite_score_count`.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    # Materialize the vectorized corpus once (r17, guide §5): KMeans
-    # .fit caches only its internal instances RDD, so model.transform
-    # re-executed the scan + cast + array_to_vector subtree.  Only
-    # (id, __v) is pinned — the rerank column is derived back via
-    # vector_to_array (exact: float->double widening then a lossless
-    # vector roundtrip; cosine_similarity folds in double either way),
-    # so the checkpoint does not hold the embedding bytes twice.
-    # kept, sf0.1 cut -> none: 22.98 -> 17.06 MB read, 0.07 -> 0.07 MB shuffled,
-    # 1.41 -> 1.51 s
-    corpus_v = cut(
-        corpus.withColumn(
-            "__v", array_to_vector(F.col(vec_col).cast("array<double>"))
-        )
-        .select(id_col, "__v"),
-        "similarity.ivf_topk.corpus_v",
+    centers = lloyd_centers(
+        training_sample(corpus, vec_col=vec_col, order_col=id_col),
+        n_cells, seed,
     )
-    # a coarse quantizer only needs rough cells — a few Lloyd rounds;
-    # extra iterations buy recall nothing once cells are stable-ish
-    km = KMeans(k=n_cells, seed=seed, maxIter=8, featuresCol="__v", predictionCol="__cell")
-    model = km.fit(corpus_v)
-    assigned = model.transform(corpus_v).select(
-        id_col, vector_to_array("__v").alias(vec_col), "__cell"
+    bc_centers = corpus.sparkSession.sparkContext.broadcast(centers)
+    assigned = corpus.select(
+        id_col, vec_col,
+        nearest_cells(F.col(vec_col), bc_centers)[0].alias("__cell"),
     )
-
-    # probe -> its n_probe_cells nearest centroids: broadcast the
-    # centroid matrix (model.clusterCenters() is already driver-side,
-    # so this collects nothing new) and argmin in an Arrow batch
-    import numpy as np
-    import pandas as pd
-
-    centers_matrix = np.array(
-        [list(map(float, c)) for c in model.clusterCenters()], dtype=np.float64
-    )
-    bc_centers = corpus.sparkSession.sparkContext.broadcast(centers_matrix)
-    n_probe = n_probe_cells
-
-    @F.pandas_udf("array<int>")
-    def nearest_cells(vecs: pd.Series) -> pd.Series:
-        M = bc_centers.value  # (n_cells, dim)
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        V = np.stack(vecs.to_numpy()).astype(np.float64)  # (batch, dim)
-        # expanded ||v-c||^2: one BLAS matmul, O(batch x n_cells) memory
-        # (the naive (V-M)^2 broadcast is O(batch x n_cells x dim))
-        d = (V * V).sum(1)[:, None] - 2.0 * (V @ M.T) + (M * M).sum(1)[None, :]
-        # stable sort on distance == (distance, cell-id) ascending — the
-        # same tiebreak the literal-expression form used
-        order = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
-
     probe_cells = probes.select(
         probe_id_col, probe_vec_col,
         F.explode(
-            nearest_cells(F.col(probe_vec_col).cast("array<double>"))
+            nearest_cells(F.col(probe_vec_col), bc_centers, n_probe_cells)
         ).alias("__cell"),
     )
     cand = assigned.join(probe_cells, "__cell")
@@ -1549,9 +1596,9 @@ def ivf_topk(
 
 @declared("q_sim_ivf")
 def q_sim_ivf(spark, sf_dir):
-    """B42 (rows-only): IVF coarse-quantized ANN for 5 probes — cell
-    assignment via distributed KMeans, probes search their 3 nearest of
-    16 cells."""
+    """B42 (rows-only): IVF coarse-quantized ANN for 5 probes — cells
+    from :func:`lloyd_centers` (driver-side Lloyd on the id-ordered
+    sample), probes search their 3 nearest of 16 cells."""
     ensure_engine_conf(spark)
     emb = scan(spark, sf_dir, "embeddings")
     probes = (
@@ -1640,9 +1687,10 @@ def q_sim_ivf_portable(spark, sf_dir):
     drops exactly the right vectors), and the exact-cosine rerank of
     the pruned candidates (:func:`_portable_exact_rerank`'s correctly
     rounded IEEE chain over exact int dots/norms).  The production
-    tier (:func:`ivf_topk`) keeps distributed KMeans, the Arrow argmin
-    router and its rows-only check + recall floors; the ONE
-    substitution here is the deterministic centroid grid.
+    tier (:func:`ivf_topk`) keeps its trained centroids
+    (:func:`lloyd_centers`), the Arrow :func:`nearest_cells` router and
+    its rows-only check + recall floors; the ONE substitution here is
+    the deterministic centroid grid, which is never trained.
 
     Scale shape mirrors the production tier: one broadcast join
     assigns cells (the centroid relation is n_cells x dim rows), the
@@ -1677,60 +1725,35 @@ def pq_codebooks(
     seed: int, train_cap: int = 4096, order_col: str | None = None,
     normalize: bool = False,
 ) -> "np.ndarray":
-    """Train product-quantization codebooks: split the embedding into
-    ``m_subspaces`` contiguous sub-vectors and run a small KMeans per
-    subspace.  Returns (m, n_codes, sub_dim) float64.
-
-    Training collects a HARD-CAPPED sample (``train_cap`` rows) to the
-    driver — the FAISS convention: codebooks are a tiny model (m x
-    n_codes x sub_dim floats) fit on a bounded sample regardless of
-    corpus size, then broadcast.  This is a bounded model-fit collect,
-    not a data collect (the corpus itself is never materialized).
-    Pass ``order_col`` to make the sample — and therefore the
-    codebooks — independent of partition layout (a bare limit() takes
-    whichever partitions answer first); ``normalize=True`` L2-
-    normalizes sample rows so codebooks live on the unit sphere the
-    cosine contract quantizes (r9 review)."""
-    src = corpus.select(vec_col, *( [order_col] if order_col else [] ))
-    if order_col:
-        src = src.orderBy(order_col)
-    sample = np.array(
-        [
-            list(map(float, r[0]))
-            for r in src.select(vec_col).limit(train_cap).collect()
-        ],
-        dtype=np.float64,
+    """Train product-quantization codebooks on the corpus's
+    :func:`training_sample` (see there for ``train_cap``,
+    ``order_col`` and ``normalize``; pass ``normalize=True`` so
+    codebooks live on the unit sphere the cosine contract quantizes).
+    Returns (m, n_codes, sub_dim) float64."""
+    return _pq_books(
+        training_sample(
+            corpus, vec_col=vec_col, order_col=order_col,
+            train_cap=train_cap, normalize=normalize,
+        ),
+        m_subspaces=m_subspaces, n_codes=n_codes, seed=seed,
     )
-    if len(sample) < n_codes:
-        raise ValueError(
-            f"PQ training needs >= n_codes ({n_codes}) vectors; "
-            f"corpus sample has {len(sample)}"
-        )
-    if normalize:
-        sample /= np.maximum(
-            np.linalg.norm(sample, axis=1, keepdims=True), 1e-12
-        )
+
+
+def _pq_books(
+    sample: "np.ndarray", *, m_subspaces: int, n_codes: int, seed: int,
+) -> "np.ndarray":
+    """Split each sample row into ``m_subspaces`` contiguous sub-vectors
+    and train ``n_codes`` :func:`lloyd_centers` per subspace, the
+    subspaces' inits drawn in order from one ``RandomState(seed)``."""
     dim = sample.shape[1]
     if dim % m_subspaces != 0:
         raise ValueError(f"dim {dim} not divisible by m_subspaces {m_subspaces}")
     sub = dim // m_subspaces
     rng = np.random.RandomState(seed)
-    books = np.empty((m_subspaces, n_codes, sub), dtype=np.float64)
-    for j in range(m_subspaces):
-        X = sample[:, j * sub : (j + 1) * sub]
-        # tiny Lloyd's (numpy): n_codes centroids on <= train_cap rows;
-        # deterministic seeded init, a handful of rounds — a coarse
-        # quantizer needs stable-ish cells, not convergence
-        centers = X[rng.choice(len(X), size=n_codes, replace=False)]
-        for _ in range(8):
-            d = ((X[:, None, :] - centers[None, :, :]) ** 2).sum(-1)
-            assign = d.argmin(1)
-            for c in range(n_codes):
-                pts = X[assign == c]
-                if len(pts):
-                    centers[c] = pts.mean(0)
-        books[j] = centers
-    return books
+    return np.stack([
+        lloyd_centers(sample[:, j * sub : (j + 1) * sub], n_codes, rng)
+        for j in range(m_subspaces)
+    ])
 
 
 def pq_encode(
@@ -1756,10 +1779,7 @@ def pq_encode(
             V /= np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
         out = np.empty((len(V), B.shape[0]), dtype=np.int32)
         for j in range(B.shape[0]):
-            X = V[:, j * sub : (j + 1) * sub]
-            C = B[j]
-            d = (X * X).sum(1)[:, None] - 2.0 * (X @ C.T) + (C * C).sum(1)[None, :]
-            out[:, j] = d.argmin(1)
+            out[:, j] = _argnearest(V[:, j * sub : (j + 1) * sub], B[j], 1)[:, 0]
         return pd.Series([row.tolist() for row in out])
 
     return df.withColumn("__pq_code", encode(F.col(vec_col).cast("array<double>")))
@@ -2019,9 +2039,9 @@ def pq_topk(
 def q_sim_pq(spark, sf_dir):
     """B42 (rows-only): product-quantization ANN for 5 probes — 8
     subspaces x 16 codes ADC scoring over the encoded corpus, exact
-    rerank of the top 50.  Rows-only by design (KMeans codebooks and
-    float ADC scores are engine-native); recall floors live in
-    tests/test_accuracy.py."""
+    rerank of the top 50.  Rows-only by design (float k-means
+    codebooks from :func:`lloyd_centers` and float ADC scores are
+    engine-native); recall floors live in tests/test_accuracy.py."""
     ensure_engine_conf(spark)
     emb = scan(spark, sf_dir, "embeddings")
     probes = (
@@ -2065,9 +2085,6 @@ def ivf_pq_topk(
     Rows with NULL/NaN scores (ADC or rerank — e.g. zero-norm or
     corrupt vectors) are EXCLUDED from candidacy and the top-k; count
     them via :func:`nonfinite_score_count`."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     # normalize corpus (cosine contract), assign IVF cells
     @F.pandas_udf("array<double>")
     def l2norm(vecs: pd.Series) -> pd.Series:
@@ -2077,30 +2094,17 @@ def ivf_pq_topk(
         V /= np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
         return pd.Series([row.tolist() for row in V])
 
-    corpus_n = corpus.withColumn(
-        "__nv", l2norm(F.col(vec_col).cast("array<double>"))
+    sample = training_sample(
+        corpus, vec_col=vec_col, order_col=id_col, normalize=True
     )
-    # Materialize the normalized corpus once (r17, guide §3.3/§5):
-    # KMeans.fit caches only its INTERNAL instances RDD, so without
-    # this the l2norm UDF subtree re-executes for model.transform and
-    # again for every downstream consumer of `resid` below.  Projected
-    # to (id, __nv, __v) so the checkpoint carries no corpus payload.
-    # kept, sf0.1 cut -> none: 30.51 -> 19.49 MB read, 0.08 -> 0.08 MB shuffled,
-    # 2.78 -> 3.81 s
-    corpus_v = cut(
-        corpus_n.withColumn("__v", array_to_vector(F.col("__nv")))
-        .select(id_col, "__nv", "__v"),
-        "similarity.ivf_pq_topk.corpus_v",
-    )
-    km = KMeans(k=n_cells, seed=seed, maxIter=8, featuresCol="__v",
-                predictionCol="__cell")
-    model = km.fit(corpus_v)
-    assigned = model.transform(corpus_v).select(id_col, "__nv", "__cell")
-    centers = np.array(
-        [list(map(float, c)) for c in model.clusterCenters()],
-        dtype=np.float64,
-    )
+    centers = lloyd_centers(sample, n_cells, seed)
     bc_centers = corpus.sparkSession.sparkContext.broadcast(centers)
+    # the PQ books train on the same sample's residuals, computed here
+    # the way the corpus's are below: no second pass over the corpus
+    books = _pq_books(
+        sample - centers[_argnearest(sample, centers, 1)[:, 0]],
+        m_subspaces=m_subspaces, n_codes=n_codes, seed=seed,
+    )
 
     @F.pandas_udf("array<double>")
     def residual(vecs: pd.Series, cells: pd.Series) -> pd.Series:
@@ -2111,21 +2115,11 @@ def ivf_pq_topk(
         R = V - C[cells.to_numpy().astype(np.int64)]
         return pd.Series([row.tolist() for row in R])
 
-    # Materialize residuals once (r17): `resid` is consumed by BOTH
-    # pq_codebooks (training-sample collect) and pq_encode, and Spark
-    # does not dedupe common subplans — without this the KMeans
-    # transform + residual UDF ran once per consumer.
-    # kept, sf0.1 cut -> none: 30.51 -> 30.41 MB read, 0.08 -> 0.08 MB shuffled,
-    # 2.78 -> 3.09 s
-    resid = cut(
-        assigned.withColumn("__r", residual(F.col("__nv"), F.col("__cell")))
-        .select(id_col, "__cell", "__r"),
-        "similarity.ivf_pq_topk.resid",
-    )
-    books = pq_codebooks(
-        resid.select(F.col("__r").alias(vec_col), F.col(id_col)),
-        vec_col=vec_col, m_subspaces=m_subspaces, n_codes=n_codes,
-        seed=seed, order_col=id_col,
+    assigned = corpus.select(
+        id_col, l2norm(F.col(vec_col).cast("array<double>")).alias("__nv")
+    ).withColumn("__cell", nearest_cells(F.col("__nv"), bc_centers)[0])
+    resid = assigned.select(
+        id_col, "__cell", residual(F.col("__nv"), F.col("__cell")).alias("__r")
     )
     coded = pq_encode(resid, books, vec_col="__r").select(
         id_col, "__cell", "__pq_code"
@@ -2137,19 +2131,16 @@ def ivf_pq_topk(
     probe_rows = probe_sel.collect()
     luts = _probe_luts(books, probe_rows)
     probe_cells_rows = []
-    c_sq = (centers * centers).sum(1)
     for r in probe_rows:
         v = np.array(list(map(float, r[1])), dtype=np.float64)
         nv = v / (np.linalg.norm(v) or 1.0)
         dots = centers @ nv  # probe . centroid, per cell (score term)
-        # cell SELECTION must use the same metric the corpus was
-        # assigned with — Euclidean KMeans: argmin ||nv-c||^2 =
-        # argmin(||c||^2 - 2 nv.c).  Ranking cells by raw dot favored
-        # large-norm centroids and skipped true nearest cells
-        # (r9 review, reproduced on the fixture: 25/50 vs 30/50
-        # top-10 coverage)
-        order = np.argsort(c_sq - 2.0 * dots, kind="stable")[:n_probe_cells]
-        for c in order:
+        # cell SELECTION uses the metric the corpus was assigned with
+        # (Euclidean), not the raw dot: ranking by dot favored
+        # large-norm centroids and skipped true nearest cells (r9
+        # review, reproduced on the fixture: 25/50 vs 30/50 top-10
+        # coverage)
+        for c in _argnearest(nv[None, :], centers, n_probe_cells)[0]:
             probe_cells_rows.append((r[0], int(c), float(dots[c])))
     bc_luts = corpus.sparkSession.sparkContext.broadcast(luts)
     adc_resid = _adc_gather_udf(bc_luts)
@@ -3083,8 +3074,9 @@ def q_cluster_kmeans(spark, sf_dir):
     count, member-id checksum, e6-truncated inertia, and the centroid
     component sum all value-pinned.  This pins the learning DYNAMICS
     the routing-only twin never exercises (its centroids stay fixed);
-    the production tier (ivf_topk's trained KMeans, the SemDeDup cell
-    blocker) keeps the fast driver-side training path, and this face
+    the production tier (:func:`lloyd_centers`, the float Lloyd that
+    trains ivf_topk's cells and the SemDeDup cell blocker) keeps the
+    fast driver-side training path, and this face
     is the cluster-balanced-curation primitive (cluster sizes =
     sampling strata).  Corpus relation is lineage-truncated once;
     every per-iteration join broadcasts k x dim centroid rows."""
