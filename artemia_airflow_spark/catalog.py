@@ -35,8 +35,12 @@ _INFERENCE_CONFS = (
     "spark.sql.parquet.inferTimestampNTZ.enabled",
 )
 # absolute path -> ((st_mtime_ns, st_size, st_ino), inference conf
-# values, inferred schema).  No lock: concurrent misses just infer twice.
+# values, inferred schema).
 _SCHEMAS: dict[str, tuple[tuple, tuple, StructType]] = {}
+# absolute path -> the lock a miss holds while it infers, so threads
+# scanning one fresh file (a DAG's parallel stages) wait for the first
+# inference instead of each running their own job.
+_INFERRING: dict[str, threading.Lock] = {}
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -45,7 +49,9 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     call, so the first read remembers the schema and later reads of the
     same unchanged file, under the same inference settings, pass it
     explicitly.  A rewritten file or a changed setting is inferred
-    again; anything but a local regular file is always inferred."""
+    again; anything but a local regular file is always inferred.
+    Concurrent misses on one file run one inference: the others wait
+    for it and reuse its schema."""
     key = os.path.abspath(path)
     try:
         st = os.stat(key)
@@ -55,12 +61,20 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
         return spark.read.parquet(path)
     file_key = (st.st_mtime_ns, st.st_size, st.st_ino)
     confs = tuple(spark.conf.get(c) for c in _INFERENCE_CONFS)
-    hit = _SCHEMAS.get(key)
-    if hit is not None and hit[:2] == (file_key, confs):
-        return spark.read.schema(hit[2]).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMAS[key] = (file_key, confs, df.schema)
-    return df
+
+    def remembered():
+        hit = _SCHEMAS.get(key)
+        return hit[2] if hit is not None and hit[:2] == (file_key, confs) else None
+
+    schema = remembered()
+    if schema is None:
+        with _INFERRING.setdefault(key, threading.Lock()):
+            schema = remembered()
+            if schema is None:
+                df = spark.read.parquet(path)
+                _SCHEMAS[key] = (file_key, confs, df.schema)
+                return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

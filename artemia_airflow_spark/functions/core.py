@@ -109,11 +109,16 @@ _RELIABLE_CHECKPOINT_LOCK = threading.Lock()
 def cut(df, name: str, *, eager: bool = True, checkpoint_dir: str | None = None):
     """The engine's one lineage cut: materialize ``df`` and return a
     frame whose plan starts at the stored blocks.  ``name`` is a
-    literal unique in the package (``module.function.var``); an eager
-    cut's jobs run under the Spark job description ``cut <name>``, and
+    literal unique in the package (``module.function.var``); the jobs a
+    cut runs here carry the Spark job description ``cut <name>``, and
     the caller's description comes back afterwards, also when the cut
-    raises.  A lazy local cut runs no job here: the first action
-    materializes it in-flight.
+    raises.  A lazy local cut (``eager=False``) still runs jobs here
+    under AQE: planning the frame runs every query stage (each
+    exchange's map side, each broadcast) at the call; only the final
+    result stage is deferred, and the first consumer's job computes and
+    stores the blocks in-flight.  So a lazy cut saves exactly one job,
+    the one that only materializes the store, and truncates the lineage
+    all the same.
 
     Durability tier (round 10): with ``checkpoint_dir`` set, a RELIABLE
     ``df.checkpoint()`` writes the blocks to that fault-tolerant path
@@ -132,9 +137,7 @@ def cut(df, name: str, *, eager: bool = True, checkpoint_dir: str | None = None)
     to retire: Spark only self-cleans with
     ``spark.cleaner.referenceTracking.cleanCheckpoints``, a
     context-start conf this library cannot set."""
-    if checkpoint_dir is None and not eager:
-        return df.localCheckpoint(eager=False)
-    if not eager:
+    if checkpoint_dir is not None and not eager:
         # observable, not just documented (ADVICE r11): the override
         # is a correctness rule of the reliable tier, but a caller
         # passing eager=False deserves a runtime signal
@@ -150,7 +153,7 @@ def cut(df, name: str, *, eager: bool = True, checkpoint_dir: str | None = None)
     sc.setJobDescription(f"cut {name}")
     try:
         if checkpoint_dir is None:
-            return df.localCheckpoint(eager=True)
+            return df.localCheckpoint(eager=eager)
         # unpersisting a cache the CALLER established would evict its
         # blocks and force full recomputes downstream (r10 review)
         already = df.storageLevel.useMemory or df.storageLevel.useDisk

@@ -33,15 +33,25 @@ def _tokens(text_col) -> "F.Column":
     return F.split(F.lower(c), r"\s+")
 
 
-def word_ngrams(text_col, n: int) -> "F.Column":
-    """All word n-grams of ``text_col`` as an array<string>.
+def _tokens_sql(text_col: str) -> str:
+    """:func:`_tokens` as SQL text, for SQL-text lambdas."""
+    return f"split(lower(`{text_col}`), '\\\\s+')"
+
+
+def word_ngrams(text_col: str, n: int) -> "F.Column":
+    """All word n-grams of column ``text_col`` as an array<string>.
 
     Pure expression (sequence + transform + slice + array_join): stays
-    inside codegen, no Python, no shuffle.  A document shorter than
-    ``n`` tokens yields its single truncated gram — same convention as
-    the DuckDB oracles (list_slice truncates identically).
+    inside the JVM, no Python, no shuffle.  The token array is bound once
+    per row as a lambda variable, so a document is lowercased and split
+    once, not once per gram.  A document shorter than ``n`` tokens
+    yields its single truncated gram — same convention as the DuckDB
+    oracles (list_slice truncates identically).
+
+    SQL-text lambdas with names no other expression uses: several
+    Python-lambda HOFs in one projection miscompute on Spark 4.1 (see
+    ``dedup._minhash_portable_bands``).
     """
-    toks = _tokens(text_col)
     if n == 2:
         # Bigram fast path (the hot case — repetition scoring runs it
         # over every document): zip_with over two shifted slices does
@@ -52,13 +62,20 @@ def word_ngrams(text_col, n: int) -> "F.Column":
         # convention: for a 1-token doc the second slice is empty,
         # zip_with pads with NULL and concat_ws skips it, yielding the
         # single truncated gram.
-        m = F.greatest(F.size(toks) - 1, F.lit(1))
-        return F.zip_with(
-            F.slice(toks, 1, m), F.slice(toks, 2, m),
-            lambda a, b: F.concat_ws(" ", a, b),
+        m = "greatest(size(__wg_t) - 1, 1)"
+        grams = (
+            f"zip_with(slice(__wg_t, 1, {m}), slice(__wg_t, 2, {m}), "
+            "(__wg_a, __wg_b) -> concat_ws(' ', __wg_a, __wg_b))"
         )
-    starts = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
-    return F.transform(starts, lambda i: F.array_join(F.slice(toks, i, n), " "))
+    else:
+        grams = (
+            f"transform(sequence(1, greatest(size(__wg_t) - {n - 1}, 1)), "
+            f"__wg_i -> array_join(slice(__wg_t, __wg_i, {n}), ' '))"
+        )
+    return F.expr(
+        f"element_at(transform(array({_tokens_sql(text_col)}), "
+        f"__wg_t -> {grams}), 1)"
+    )
 
 
 def decontaminate(
@@ -2201,12 +2218,12 @@ def containment_scores(
     grams = spread_for_compute(docs).select(
         F.col(id_col),
         F.explode(
-            F.array_distinct(word_ngrams(F.col(text_col), n))
+            F.array_distinct(word_ngrams(text_col, n))
         ).alias("gram"),
     ).filter(real)
     ref_grams = spread_for_compute(ref).select(
         F.explode(
-            F.array_distinct(word_ngrams(F.col(text_col), n))
+            F.array_distinct(word_ngrams(text_col, n))
         ).alias("gram")
     ).filter(real).distinct()
     hit = ref_grams.withColumn("__hit", F.lit(1))
@@ -2629,7 +2646,8 @@ def corpus_survivors(
 
     grams, s_near = overlap(
         # kept: tests/test_plans.py::test_corpus_pipeline_no_stage_rescans_the_corpus pins it
-        lambda: cut(ev_grams, "curation.corpus_survivors.ev_grams"), train_chain
+        lambda: cut(ev_grams, "curation.corpus_survivors.ev_grams", eager=False),
+        train_chain,
     )
     return _stage(
         decontaminate(
@@ -2693,7 +2711,12 @@ def corpus_pipeline(
     side and ONCE for the eval side across the entire pipeline, and
     every later stage reads only the previous stage's materialization
     — pinned by the plan audit test via the ``audit`` hook, which
-    captures each stage's pre-materialization plan.
+    captures each stage's pre-materialization plan.  The stores are
+    lazy cuts (``dedup.stage_fn``; the eval-grams store and the
+    classifier's presence relation too): under AQE each still runs its
+    query stages at the cut, and only the result stage that writes the
+    blocks moves into the first consumer's job, so each store costs one
+    job less than an eager one (a pass runs 30 jobs, not 37).
 
     Returns the manifest: (split, source, n_rows, n_docs, sum_tokens,
     split_seqs) — materialized row counts (post-repetition), distinct

@@ -48,14 +48,21 @@ def stage_fn(audit: list | None):
     auditing, then :func:`~..functions.core.cut` under the stage's
     name (Spark re-expands common subplans, and every stage fans into
     2-3 consumers).  Shared by the corpus capstone/release (curation)
-    and the behavioral pipeline."""
+    and the behavioral pipeline.
+
+    The stores are lazy (``eager=False``): under AQE the stage's query
+    stages still run at the cut, under ``cut <name>``, and the lineage
+    is truncated the same; only the result stage that writes the blocks
+    moves into the first consumer's job.  An eager store ran that
+    result stage as a job of its own, so each lazy store costs one job
+    less."""
 
     def _stage(df: DataFrame, name: str) -> DataFrame:
         if audit is not None:
             audit.append((name, df._jdf.queryExecution().explainString(
                 df.sparkSession._jvm.org.apache.spark.sql.execution
                 .ExplainMode.fromString("extended"))))
-        return cut(df, name)
+        return cut(df, name, eager=False)
 
     return _stage
 

@@ -474,7 +474,7 @@ def classifier_scores(
     db = cut(rows.select(
         id_col, "__t",
         F.substring(F.md5(F.col("__feat")), 1, 2).alias("bucket"),
-    ).distinct(), "selection.classifier_scores.db")
+    ).distinct(), "selection.classifier_scores.db", eager=False)
     bs = db.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_all"),
         F.sum(F.when(F.col("__t"), 1).otherwise(0)).cast("bigint")

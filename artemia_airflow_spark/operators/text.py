@@ -99,15 +99,22 @@ def fingerprint(
     result is differentially checkable) at the cost of a 32-char
     fingerprint — pick it when cross-engine reproducibility matters
     more than shuffle width.
+
+    The token array is bound once per row as a lambda variable, so a
+    document is tokenized once, not once per gram (SQL-text lambdas, as
+    in :func:`~.curation.word_ngrams`).
     """
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
-    n = F.greatest(F.size(toks) - 3, F.lit(1))
-    hasher = F.xxhash64 if hash_fn == "xxhash64" else F.md5
-    gram_hashes = F.transform(
-        F.sequence(F.lit(0), n - 1),
-        lambda i: hasher(F.concat_ws(" ", F.slice(toks, i + 1, 4))),
+    from artemia_airflow_spark.operators.curation import _tokens_sql
+
+    hasher = "xxhash64" if hash_fn == "xxhash64" else "md5"
+    gram_hashes = (
+        f"element_at(transform(array({_tokens_sql(text_col)}), __fp_t -> "
+        "transform(sequence(0, greatest(size(__fp_t) - 3, 1) - 1), __fp_i -> "
+        f"{hasher}(concat_ws(' ', slice(__fp_t, __fp_i + 1, 4))))), 1)"
     )
-    return spread_for_compute(df).withColumn("doc_fingerprint", F.array_min(gram_hashes))
+    return spread_for_compute(df).withColumn(
+        "doc_fingerprint", F.expr(f"array_min({gram_hashes})")
+    )
 
 
 # --------------------------------------------------------------------------

@@ -50,6 +50,22 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     # 100 entries); 4096 holds them all.
     # Static: read once when the context starts.
     "spark.sql.codegen.cache.maxEntries": "4096",
+    # lower()/upper() through the JDK's case mapping, not ICU's.  With
+    # ICU on (Spark 4's default) every lower() goes through
+    # CollationAwareUTF8String, whose static initializer calls ICU
+    # toTitleCase on all 1,114,112 code points: the first executor
+    # thread to lowercase spends about 1 s there (1.0-1.2 s measured on a
+    # 4-core host) and every other thread that lowercases waits on the
+    # class-init lock, once per JVM.  With ICU off the class is never
+    # initialized.  ASCII text takes UTF8String.toLowerCaseAscii on both
+    # paths, so its output does not change.  Where JDK 17 and ICU 77
+    # disagree (lower() of 67 uppercase code points, upper()
+    # of their 67 lowercase partners) DuckDB 1.0, the oracle, follows
+    # the JDK on all of them; over the 2,981 code points that lower() or
+    # upper() changes, DuckDB matches the JDK path on 2,872 and the ICU
+    # path on 2,738.  tests/test_case_mapping.py pins the 67 + 67.
+    # Runtime: ensure_engine_conf sets it on a session built elsewhere.
+    "spark.sql.icu.caseMappings.enabled": "false",
 }
 
 
@@ -82,6 +98,7 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     classes on every run there.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.icu.caseMappings.enabled", "false")
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
     except Exception:

@@ -1,7 +1,7 @@
 """The engine's one lineage cut, ``functions.core.cut``: every
-materialization goes through it under a unique literal name, an eager
-cut's jobs carry that name as their Spark job description, and the
-reliable tier keeps its eager-only rule."""
+materialization goes through it under a unique literal name, the jobs a
+cut runs (eager or lazy) carry that name as their Spark job description,
+and the reliable tier keeps its eager-only rule."""
 
 from __future__ import annotations
 
@@ -101,6 +101,34 @@ def test_eager_cut_jobs_carry_its_name_and_restore_the_callers(spark):
         sc.setLocalProperty(DESC, None)
     cut(spark.range(2), "test.cut.no_caller_description")
     assert sc.getLocalProperty(DESC) is None
+
+
+def test_lazy_cut_runs_its_stage_jobs_under_its_name(spark):
+    """Under AQE a lazy local cut of a ``groupBy`` frame runs the
+    exchange's map side at the call, so those jobs carry ``cut <name>``;
+    only the result stage waits for the first consumer."""
+    def job_description(_):  # nested: pickled by value for the worker
+        from pyspark import TaskContext
+
+        return TaskContext.get().getLocalProperty("spark.job.description")
+
+    sc = spark.sparkContext
+    group = "lazy-cut-at-the-call"
+    sc.setLocalProperty(DESC, "caller")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        described = F.udf(job_description, "string")("id").alias("d")
+        grouped = spark.range(4).select(described).groupBy("d").count()
+        out = cut(grouped, "test.cut.lazy", eager=False)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) != []
+        assert sc.getLocalProperty(DESC) == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    try:
+        sc.setLocalProperty(DESC, "consumer")
+        assert [(r.d, r["count"]) for r in out.collect()] == [("cut test.cut.lazy", 4)]
+    finally:
+        sc.setLocalProperty(DESC, None)
 
 
 def test_reliable_cut_warns_on_lazy_and_still_writes_under_its_dir(spark, tmp_path):

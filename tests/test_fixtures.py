@@ -123,6 +123,38 @@ def test_second_scan_reuses_the_parquet_schema(spark):
     assert sorted(second.collect()) == sorted(first.collect())
 
 
+def test_concurrent_scans_of_a_fresh_file_infer_once(spark, tmp_path):
+    """Four threads scanning one file nobody has read yet run one
+    schema-inference job: the others wait for it and reuse its schema."""
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from artemia_airflow_spark.functions.core import spark_thread
+
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}),
+                   str(tmp_path / "region.parquet"))
+    start = threading.Barrier(4)
+    frames = []
+
+    def scan_at_once():
+        start.wait()
+        frames.append(scan(spark, str(tmp_path), "region"))
+
+    def scan_from_four_threads():
+        threads = [spark_thread(scan_at_once) for _ in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60.0)
+
+    _, jobs = _jobs_in_group(spark, "scan-concurrent-miss", scan_from_four_threads)
+    assert len(frames) == 4
+    assert len(jobs) == 1, jobs
+    assert {tuple(f.columns) for f in frames} == {("r_regionkey", "r_name")}
+
+
 def test_scan_sees_a_rewritten_file(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq

@@ -1065,6 +1065,26 @@ def test_corpus_pipeline_repeat_reuses_generated_classes(spark):
     assert repeat <= 16, repeat
 
 
+def test_corpus_pipeline_job_budget(spark):
+    """One q_corpus_pipeline pass at sf0.01 runs 30 Spark jobs, counted
+    in one job group (the eval-grams thread inherits it).  The seven
+    stage stores are lazy cuts, each one job less than an eager cut
+    (37 jobs with eager stores).  The fixture's schema is remembered
+    first, so the count holds whichever test scanned the file before."""
+    from artemia_airflow_spark.catalog import scan as cat_scan
+
+    cat_scan(spark, SF_ORACLE, "documents")
+    sc = spark.sparkContext
+    group = "corpus-pipeline-job-budget"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        rows = entrymod.queries()["q_corpus_pipeline"](spark, SF_ORACLE).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 30
+
+
 def _df_plan(spark, df) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode
