@@ -38,20 +38,9 @@ def _tokens_sql(text_col: str) -> str:
     return f"split(lower(`{text_col}`), '\\\\s+')"
 
 
-def word_ngrams(text_col: str, n: int) -> "F.Column":
-    """All word n-grams of column ``text_col`` as an array<string>.
-
-    Pure expression (sequence + transform + slice + array_join): stays
-    inside the JVM, no Python, no shuffle.  The token array is bound once
-    per row as a lambda variable, so a document is lowercased and split
-    once, not once per gram.  A document shorter than ``n`` tokens
-    yields its single truncated gram — same convention as the DuckDB
-    oracles (list_slice truncates identically).
-
-    SQL-text lambdas with names no other expression uses: several
-    Python-lambda HOFs in one projection miscompute on Spark 4.1 (see
-    ``dedup._minhash_portable_bands``).
-    """
+def _word_ngrams_sql(text_col: str, n: int) -> str:
+    """SQL text of :func:`word_ngrams`, for callers that wrap the gram
+    array in a further SQL-text lambda."""
     if n == 2:
         # Bigram fast path (the hot case — repetition scoring runs it
         # over every document): zip_with over two shifted slices does
@@ -72,10 +61,27 @@ def word_ngrams(text_col: str, n: int) -> "F.Column":
             f"transform(sequence(1, greatest(size(__wg_t) - {n - 1}, 1)), "
             f"__wg_i -> array_join(slice(__wg_t, __wg_i, {n}), ' '))"
         )
-    return F.expr(
+    return (
         f"element_at(transform(array({_tokens_sql(text_col)}), "
         f"__wg_t -> {grams}), 1)"
     )
+
+
+def word_ngrams(text_col: str, n: int) -> "F.Column":
+    """All word n-grams of column ``text_col`` as an array<string>.
+
+    Pure expression (sequence + transform + slice + array_join): stays
+    inside the JVM, no Python, no shuffle.  The token array is bound once
+    per row as a lambda variable, so a document is lowercased and split
+    once, not once per gram.  A document shorter than ``n`` tokens
+    yields its single truncated gram — same convention as the DuckDB
+    oracles (list_slice truncates identically).
+
+    SQL-text lambdas with names no other expression uses: several
+    Python-lambda HOFs in one projection miscompute on Spark 4.1 (see
+    ``dedup._minhash_portable_bands``).
+    """
+    return F.expr(_word_ngrams_sql(text_col, n))
 
 
 def decontaminate(
@@ -2444,7 +2450,7 @@ def ngram_novelty(
     exchanges after the gram agg is bounded by the unique-gram
     vocabulary, then by the doc count.
     """
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
+    toks = _tokens(text_col)
     # gate on the CHEAP precondition (token count), not on the computed
     # gram array being non-NULL: Catalyst pushes filters through the
     # spread repartition, and a filter referencing the md5-gram
@@ -2457,14 +2463,14 @@ def ngram_novelty(
     # expression into that predicate, and may evaluate it on rows the
     # size-gate has not yet removed — sequence(0, size-n) runs
     # DESCENDING for short docs and feeds slice() a 0 start (runtime
-    # error).  greatest(.., 1) keeps the sequence ascending; a short
-    # doc yields one junk gram (its whole token list) that the
-    # explicit filter then drops before the gram is ever used.
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, n))),
-        )
+    # error).  word_ngrams' greatest(.., 1) keeps the sequence
+    # ascending; a short doc yields one junk gram (its whole token
+    # list) that the explicit filter then drops before it is used.
+    # The tokens are split once per document (word_ngrams binds them),
+    # not once per gram.
+    grams = F.expr(
+        f"array_distinct(transform({_word_ngrams_sql(text_col, n)}, "
+        "__nv_g -> md5(__nv_g)))"
     )
     # materialize the per-doc gram arrays once (r17, guide §3.3/§5):
     # base feeds BOTH the doc-stats projection and the explode below,

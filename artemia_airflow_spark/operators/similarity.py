@@ -12,13 +12,14 @@ Two tiers:
   the same hash bucket, turning the O(N) scan into O(N/2^bits)
   expected work per probe.  Recall is tunable via (bits, tables).
 
-Both stay in DataFrame land; the projection matrix is a seeded literal
-array (deterministic, broadcast with the plan).
+Both stay in DataFrame land.  The SRP planes are md5-derived ±1
+signs (:func:`srp_bucket_rows`), the same family the DuckDB oracle
+of ``q_sim_ann_lsh_portable`` computes.
 """
 
 from __future__ import annotations
 
-import random
+import hashlib
 
 import numpy as np
 import pandas as pd
@@ -62,45 +63,69 @@ def cosine_topk(
     )
 
 
-def _hyperplanes(dim: int, bits: int, seed: int) -> list[list[float]]:
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(bits)]
+def _srp_planes(dim: int, bits: int, tables: int) -> np.ndarray:
+    """(tables*bits, dim) int64 ±1 SRP plane matrix, row t*bits + b:
+    ``s(t,b,d) = -1 iff hex digit (d % 32)+1 of md5('srp|t|b|' || d div
+    32) >= '8'`` (one digest covers 32 dims; hashlib's lowercase hex is
+    Spark's and DuckDB's).  ±1 entries keep the random-projection
+    angle guarantee of gaussian planes (Achlioptas, PODS 2001)."""
+    rows = []
+    for t in range(tables):
+        for b in range(bits):
+            hx = "".join(
+                hashlib.md5(f"srp|{t}|{b}|{j}".encode()).hexdigest()
+                for j in range((dim + 31) // 32)
+            )
+            rows.append([-1 if hx[d] >= "8" else 1 for d in range(dim)])
+    return np.array(rows, dtype=np.int64)
 
 
-def srp_buckets(vec_col, *, dim: int, bits: int, tables: int, seed: int) -> "F.Column":
-    """Signed-random-projection bucket ids, all tables at once:
-    returns array<long> of length ``tables``; bit i of table t =
-    sign(<vec, plane_{t,i}>).
+def srp_bucket_rows(
+    df: DataFrame, *, id_col: str, vec_col: str,
+    dim: int = 64, bits: int = 6, tables: int = 2,
+) -> DataFrame:
+    """(id, t, bucket): the SRP-LSH bucket of every vector in each of
+    ``tables`` tables — the engine's one SRP hash, behind
+    :func:`lsh_topk`, ``dedup.embedding_neardup_lsh`` and the portable
+    faces.  Bit b of table t = (signed projection >= 0) on the planes
+    of :func:`_srp_planes`; bucket = the packed ``bits``-bit integer.
 
-    Arrow-batched numpy matmul ((batch x dim) @ (dim x tables*bits)) —
-    one BLAS call per batch instead of tables*bits interpreted
-    expression folds per row; the plane matrix is generated from the
-    seed inside the executor (tiny, deterministic)."""
+    Components are widened to double (exact) and rounded half-up to
+    1e-6-scaled BIGINTs (floor(x*1e6 + 0.5), as :func:`embedding_comps`),
+    so each projection is an exact int64 sum: order-independent and
+    identical to the oracle's SQL.  NULL or empty vectors get no
+    bucket rows.
+
+    Scale shape: one Arrow-batched int64 matmul per batch,
+    (batch x dim) @ (dim x tables*bits), with the planes held in the
+    UDF closure; only the (id, t, bucket) rows leave the vector row,
+    never (id, d) components."""
     from pyspark.sql.functions import pandas_udf
 
-    planes = np.array(
-        [_hyperplanes(dim, bits, seed + t) for t in range(tables)], dtype="float64"
-    )  # (tables, bits, dim)
-    proj_mat = planes.reshape(tables * bits, dim).T  # (dim, tables*bits)
-    weights = (1 << np.arange(bits, dtype="int64"))  # bit packing
+    planes_t = _srp_planes(dim, bits, tables).T  # (dim, tables*bits)
+    weights = 1 << np.arange(bits, dtype=np.int64)
 
-    @pandas_udf("array<long>")
-    def bucketize(vecs: pd.Series) -> pd.Series:
-        mat = np.asarray([np.asarray(v, dtype="float64") for v in vecs])
-        if mat.size == 0:
-            return pd.Series([], dtype=object)
-        signs = (mat @ proj_mat >= 0).astype("int64").reshape(len(vecs), tables, bits)
-        ids = (signs * weights).sum(axis=2)  # (batch, tables)
-        return pd.Series(list(ids))
+    @pandas_udf("array<bigint>")
+    def srp_bucket_ids(vecs: pd.Series) -> pd.Series:
+        ok = [v is not None and len(v) > 0 for v in vecs]
+        if not any(ok):
+            return pd.Series([None] * len(vecs), dtype=object)
+        V = np.stack(vecs[ok].to_numpy()).astype(np.float64)
+        V6 = np.floor(V * 1_000_000 + 0.5).astype(np.int64)
+        on = (V6 @ planes_t >= 0).reshape(len(V6), tables, bits)
+        ids = iter((on * weights).sum(axis=2))
+        return pd.Series([next(ids) if k else None for k in ok], dtype=object)
 
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return bucketize(c)
+    return df.select(
+        F.col(id_col),
+        F.posexplode(srp_bucket_ids(F.col(vec_col))).alias("t", "bucket"),
+    )
 
 
 def lsh_topk(
     corpus: DataFrame, probes: DataFrame, *, id_col: str, probe_id_col: str,
     vec_col: str = "embedding", probe_vec_col: str = "probe_vec",
-    k: int = 10, dim: int = 64, bits: int = 8, tables: int = 4, seed: int = 42,
+    k: int = 10, dim: int = 64, bits: int = 8, tables: int = 4,
 ) -> DataFrame:
     """Approximate cosine top-k via multi-table SRP-LSH.
 
@@ -112,8 +137,10 @@ def lsh_topk(
 
     Tuning (quantified in tests/test_accuracy.py): on i.i.d. gaussian
     vectors — the adversarial case, where true neighbors are barely
-    closer than random — the (bits=8, tables=4) default measures mean
-    recall@10 ~0.06, bits=4/tables=8 ~0.65, bits=4/tables=16 ~0.9.
+    closer than random — mean recall@10 over the fixtures' 5 probes at
+    sf0.001 / sf0.01 / sf0.1 measures 0.10 / 0.06 / 0.06 for the
+    (bits=8, tables=4) default, 0.54 / 0.62 / 0.70 for bits=4/tables=8
+    and 0.80 / 0.80 / 0.92 for bits=4/tables=16.
     Clustered real-world embeddings reach high recall at much higher
     bits (cheaper candidates); measure on YOUR corpus with the harness
     before trusting a config.
@@ -144,15 +171,11 @@ def lsh_topk(
     """
     # kept, sf0.1 cut -> none: 0.24 -> 0.31 MB read, 0.03 -> 0.03 MB shuffled
     probes = cut(probes, "similarity.lsh_topk.probes")
-    buckets = dict(dim=dim, bits=bits, tables=tables, seed=seed)
-    ce = corpus.select(
-        id_col,
-        F.posexplode(srp_buckets(vec_col, **buckets)).alias("tbl", "b"),
-    ).withColumn("key", F.struct("tbl", "b"))
-    pe = probes.select(
-        probe_id_col,
-        F.posexplode(srp_buckets(probe_vec_col, **buckets)).alias("tbl", "b"),
-    ).withColumn("key", F.struct("tbl", "b"))
+    buckets = dict(dim=dim, bits=bits, tables=tables)
+    ce = srp_bucket_rows(corpus, id_col=id_col, vec_col=vec_col, **buckets)
+    pe = srp_bucket_rows(
+        probes, id_col=probe_id_col, vec_col=probe_vec_col, **buckets
+    )
     # candidate dedup on ID PAIRS ONLY (r11): a multi-table join emits
     # each colliding pair up to `tables` times, and the old 4-column
     # distinct shuffled BOTH embedding vectors per duplicate — ids are
@@ -161,7 +184,7 @@ def lsh_topk(
     # with a bucketed corpus at scale), the probe side broadcast (the
     # probe set is the small side by contract, same as cosine_topk).
     cand_ids = (
-        ce.join(pe, ce.key == pe.key)
+        ce.join(pe, ["t", "bucket"])
         .select(probe_id_col, id_col)
         .distinct()
     )
@@ -225,8 +248,9 @@ def q_sim_ann_lsh(spark, sf_dir):
     (tests/test_accuracy.py) carries the quantified guarantee.  Config
     bits=4/tables=8, not the library default: the fixture vectors are
     i.i.d. gaussian (the ANN-adversarial case) where the default's
-    recall@10 measures ~0.06 — this config measures ~0.65 at half a
-    scan's candidate cost, an honest operating point for this data."""
+    recall@10 measures 0.06-0.10 — this config measures 0.54 / 0.62 /
+    0.70 at sf0.001 / sf0.01 / sf0.1 at half a scan's candidate cost,
+    an honest operating point for this data."""
     ensure_engine_conf(spark)
     emb = scan(spark, sf_dir, "embeddings")
     probes = (
@@ -236,81 +260,6 @@ def q_sim_ann_lsh(spark, sf_dir):
     return lsh_topk(
         emb.filter(F.col("vec_id") >= 5), probes,
         id_col="vec_id", probe_id_col="probe_id", k=10, bits=4, tables=8,
-    )
-
-
-def srp_portable_buckets(
-    df: DataFrame, *, id_col: str, vec_col: str,
-    tables: int = 2, bits: int = 6, dim: int = 64,
-) -> DataFrame:
-    """Engine-portable SRP-LSH bucket ids (round 10, VERDICT r9 #3 —
-    the simhash-oracle trick applied to hyperplane LSH): plane
-    component signs are ±1 derived from md5 hex (``s(t,b,d) = -1 iff
-    hex digit (d % 32)+1 of md5('srp|t|b|' || d div 32) >= '8'`` —
-    one digest covers 32 dims), and embedding components are widened
-    to double (exact) then rounded half-up to 1e-6-scaled BIGINTs, so
-    the signed projection is an exact integer sum — order-independent
-    and identical in any engine.  Bit b of table t = (sum >= 0),
-    matching :func:`srp_buckets`'s sign convention; bucket = the
-    packed ``bits``-bit integer.  Rademacher (±1) planes preserve the
-    SRP angle-collision property the gaussian production planes have;
-    the fast numpy tier (:func:`srp_buckets`) keeps the production
-    path.  Returns (id, t, bucket).
-
-    Scale shape (r17, guide §2.3/§4.2 — the map-side trick of the
-    MinHash/IVF-PQ portable rewrites): the ±1 plane signs are
-    deterministic md5 digits, so they are computed driver-side
-    (hashlib md5 produces the same lowercase hex as Spark's) and
-    broadcast as a numpy ±1 matrix; every signed projection then
-    computes inside the vector row in ONE Arrow-vectorized int64
-    matmul, and only the final (id, t, bucket) rows exist at all —
-    the r16 shape exploded (id, d) x broadcast planes and paid two
-    keyed aggregations of that N x dim x tables*bits relation.  The
-    e6 quantization (double-widen, floor(x*1e6 + 0.5)) matches
-    embedding_comps exactly and the products/sums are exact int64, so
-    values are unchanged (attested by the hash-match consumers)."""
-    import hashlib
-
-    from pyspark.sql.functions import pandas_udf
-
-    def _sign(t: int, b: int, d: int) -> int:
-        hx = hashlib.md5(f"srp|{t}|{b}|{d // 32}".encode()).hexdigest()
-        return -1 if hx[d % 32] >= "8" else 1
-
-    S = np.array(
-        [
-            [_sign(t, b, d) for d in range(dim)]
-            for t in range(tables)
-            for b in range(bits)
-        ],
-        dtype=np.int64,
-    )  # (tables*bits, dim)
-    weights = 1 << np.arange(bits, dtype=np.int64)
-    bc = df.sparkSession.sparkContext.broadcast(S)
-    n_tables = tables
-
-    @pandas_udf("array<bigint>")
-    def srp_buckets_e6(vecs: pd.Series) -> pd.Series:
-        Sb = bc.value
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        V = np.stack(vecs.to_numpy()).astype(np.float64)
-        V6 = np.floor(V * 1_000_000 + 0.5).astype(np.int64)
-        sd = V6 @ Sb.T  # (batch, tables*bits), exact int64
-        bits_set = (sd >= 0).astype(np.int64).reshape(len(V6), n_tables, -1)
-        return pd.Series(list((bits_set * weights).sum(axis=2)))
-
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return (
-        # len-0 / NULL vectors produced no exploded comps rows in the
-        # r16 shape, hence no bucket rows — keep that exact behavior
-        df.filter(c.isNotNull() & (F.size(c) > 0))
-        .select(F.col(id_col), srp_buckets_e6(c).alias("__bks"))
-        .select(
-            id_col,
-            F.posexplode("__bks").alias("t", "bucket"),
-        )
-        .select(id_col, F.col("t").cast("bigint").alias("t"), "bucket")
     )
 
 
@@ -394,16 +343,17 @@ def q_sim_ann_lsh_portable(spark, sf_dir):
     """B42's approximate-similarity class as a FULL hash-match oracle
     (round 10 — the last value-unchecked LLM-pipeline block, VERDICT
     r9 #3): SRP-LSH candidate generation AND the exact rerank, both
-    engine-portable.  Buckets come from md5-derived ±1 planes over
-    scaled-int components (exact integer sums — see
-    :func:`srp_portable_buckets`); the rerank cosine is computed from
-    exact integer dot products and norms, where every float op
+    engine-portable.  Buckets come from the engine's one SRP hash,
+    md5-derived ±1 planes over scaled-int components (exact integer
+    sums — see :func:`srp_bucket_rows`); the rerank cosine is computed
+    from exact integer dot products and norms, where every float op
     (int<2^53 -> double cast, sqrt, multiply, divide) is correctly
     rounded under IEEE-754, so the double scores — and therefore the
     (score desc, vec_id) ranking — are bit-identical in Spark and
     DuckDB.  Emitted as 1e-6-scaled ints.  The production tier
-    (:func:`lsh_topk`, gaussian planes + numpy matmul) keeps its
-    rows-only check + recall floors."""
+    (:func:`lsh_topk`) hashes with the same planes but keeps its float
+    rerank: this face's exact-integer rerank explodes vectors into
+    (id, d) rows, dim x the corpus."""
     ensure_engine_conf(spark)
     emb = scan(spark, sf_dir, "embeddings")
     # materialize the two shared relations ONCE: Spark does not dedupe
@@ -413,7 +363,7 @@ def q_sim_ann_lsh_portable(spark, sf_dir):
     # (N x tables and N x dim scaled-int rows, no text/vectors)
     # kept, sf0.1 cut -> none: 47.87 -> 47.27 MB read, 0.03 -> 0.03 MB shuffled,
     # 0.73 -> 0.91 s
-    buckets = cut(srp_portable_buckets(
+    buckets = cut(srp_bucket_rows(
         emb, id_col="vec_id", vec_col="embedding"
     ), "similarity.q_sim_ann_lsh_portable.buckets")
     corpus_b = buckets.filter(F.col("vec_id") >= 5)

@@ -604,21 +604,19 @@ def chunk_documents(
     if not 0 <= overlap < max_tokens:
         raise ValueError("need 0 <= overlap < max_tokens")
     step = max_tokens - overlap
-    toks = F.split(F.col(text_col), r"\s+")
-    n = F.size(toks)
-    n_chunks = F.greatest(
-        F.lit(1),
-        F.ceil((n - F.lit(overlap)) / F.lit(float(step))).cast("int"),
+    # the token array is bound once per row as a lambda variable (split
+    # once, not twice per chunk); SQL-text lambdas with unique names,
+    # as in curation.word_ngrams
+    window = f"slice(__ck_t, __ck_i * {step} + 1, {max_tokens})"
+    n_chunks = (
+        f"greatest(1, CAST(ceil((size(__ck_t) - {overlap}) "
+        f"/ CAST({step} AS DOUBLE)) AS INT))"
     )
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.struct(
-            i.cast("int").alias("chunk_id"),
-            F.size(F.slice(toks, i * step + 1, max_tokens)).alias("n_tokens"),
-            F.array_join(F.slice(toks, i * step + 1, max_tokens), " ").alias(
-                "chunk_text"
-            ),
-        ),
+    chunks = F.expr(
+        f"element_at(transform(array(split(`{text_col}`, '\\\\s+')), "
+        f"__ck_t -> transform(sequence(0, {n_chunks} - 1), __ck_i -> "
+        f"struct(CAST(__ck_i AS INT) AS chunk_id, size({window}) AS n_tokens, "
+        f"array_join({window}, ' ') AS chunk_text))), 1)"
     )
     return df.select(F.col(id_col), F.explode(chunks).alias("__c")).select(
         id_col,

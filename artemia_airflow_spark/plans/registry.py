@@ -48,37 +48,9 @@ DRIVER_WINDOW = 50
 # Faces with no driver CORRECTNESS row yet (new this round) — they
 # lead the derived window.  Names not yet registered are skipped
 # (forward-safe), and entries SELF-RETIRE into the normal rotation as
-# soon as a green driver row exists (r17 review: a hand-list that
-# requires manual pruning is the stale-hand-list hazard again);
-# delete them here on the next registry edit purely for tidiness.
-NEW_FACES: list[str] = [
-    "q_behavior_pipeline",  # r17 B185 composed behavioral pipeline
-    "q_corpus_release",  # r17 B186 curriculum + versioned training export
-]
-
-# Override-only fallback: the driver-check order used when no
-# CORRECTNESS history is readable (fresh clone / installed package).
-# Mirrors the r17 derived window: the 7 rows last attested r11, then
-# the r12 cohort head in registration order.
-PRIORITY: list[str] = [
-    "q_source_cap", "q_text_oov", "q_sql_window", "q_sql_subq_corr",
-    "q_sql_setop", "q_dedup_semantic_portable", "q_embed_quantize_packed",
-    "q_tpch_q3", "q_tpch_q5", "q_tpch_q10", "q_unpivot", "q_gapfill",
-    "q_decontaminate", "q_shard", "q_text_repetition",
-    "q_multimodal_decode", "q_join_asof", "q_agg_distinct",
-    "q_agg_rollup", "q_agg_cube", "q_window_rank", "q_window_lag",
-    "q_window_running", "q_sink_bucketed", "q_stream_first",
-    "q_fn_map", "q_fn_json", "q_fn_null", "q_subq_scalar",
-    "q_subq_in", "q_udf_scalar", "q_pandas_norm", "q_pivot",
-    "q_join_right", "q_subq_exists", "q_window_range_frame",
-    "q_fn_string2", "q_udtf", "q_window_dist", "q_sim_ann_lsh",
-    "q_sim_ivf", "q_text_langid", "q_text_fingerprint",
-    "q_text_wordpiece", "q_text_quality_full", "q_stream_session",
-    "q_length_buckets", "q_tpch_q17", "q_stream_session_state",
-    "q_text_scrub",
-]
-
-assert len(PRIORITY) == len(set(PRIORITY)), "duplicate PRIORITY entry"
+# soon as a green driver row exists; delete them here on the next
+# registry edit purely for tidiness.
+NEW_FACES: list[str] = []
 
 _CORRECTNESS_RE = re.compile(r"CORRECTNESS_r(\d+)\.json$")
 
@@ -155,16 +127,10 @@ def derive_priority(
     NEW_FACES that are still unattested first (an attested new face
     self-retires into the normal rotation), then every registered
     query oldest-attested-first (never-attested sorts oldest;
-    registration order breaks ties), capped at ``window``.  Falls back
-    to the hand PRIORITY list (NEW_FACES still leading) when no
-    CORRECTNESS history exists."""
+    registration order breaks ties), capped at ``window``.  With no
+    CORRECTNESS history every query is unattested, so the window is
+    NEW_FACES, then registration order."""
     attested = latest_attested_rounds(history_dir)
-    if not attested:
-        lead = [n for n in NEW_FACES if n in QUERIES]
-        out = lead + [
-            n for n in PRIORITY if n in QUERIES and n not in set(lead)
-        ]
-        return out[: max(window, len(lead))]
     front = [
         n for n in NEW_FACES if n in QUERIES and n not in attested
     ]

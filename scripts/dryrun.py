@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Shared round-closing dry run (FIXTURES.md round-verification
-protocol): the full PRIORITY window at sf0.001 + sf0.01 + sf0.1,
+protocol): the full derived driver window at sf0.001 + sf0.01 + sf0.1,
 every remaining registry query at sf0.01 — driver-gate semantics
 (sorted stringified rows vs the DuckDB oracle, plus per-column
 agreement of the pandas-rendered types, which the driver's value hash
@@ -46,8 +46,8 @@ from artemia_airflow_spark.plans.registry import (
 from artemia_airflow_spark.plans.typelint import duck_render_class, spark_render_class
 
 q, o = E.queries(), E.oracle_sql()
-PRIORITY = derive_priority()
-CHECK = FACES or PRIORITY
+WINDOW = derive_priority()
+CHECK = FACES or WINDOW
 assert set(CHECK) <= set(q), sorted(set(CHECK) - set(q))
 
 # Rotation-staleness gate (VERDICT r16 item 4): oldest-first rotation
@@ -77,7 +77,7 @@ if _m and latest_attested_rounds():
     )
     # never-attested sorts infinitely stale: it must be in the window
     projected = {n: attested.get(n, -(10 ** 9)) for n in q}
-    projected.update({n: N for n in PRIORITY})
+    projected.update({n: N for n in WINDOW})
     # a row attested at A must be re-attested by round A + period, so
     # at round N (post-window) any A <= N - period is a violation
     stale = sorted(n for n, r in projected.items() if r <= N - period)
@@ -85,7 +85,7 @@ if _m and latest_attested_rounds():
         f"rotation leaves {len(stale)} queries older than {period} "
         f"rounds after the r{N} window: {stale}"
     )
-    print(f"rotation gate: {len(q)} queries, window {len(PRIORITY)}, "
+    print(f"rotation gate: {len(q)} queries, window {len(WINDOW)}, "
           f"period {period}, oldest projected attestation "
           f"r{min(projected.values())}")
 
@@ -153,7 +153,7 @@ for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01",
     con.close()
 
 con = duck_for("/root/testdata/sf0.01")
-rest = [] if FACES else [n for n in q if n not in PRIORITY]
+rest = [] if FACES else [n for n in q if n not in WINDOW]
 for name in rest:
     t0 = time.time()
     try:
@@ -165,7 +165,7 @@ for name in rest:
           flush=True)
 con.close()
 
-print(f"\nTOTAL queries: {len(q)}  PRIORITY: {len(PRIORITY)}  "
+print(f"\nTOTAL queries: {len(q)}  WINDOW: {len(WINDOW)}  "
       f"FAILS: {len(fails)}")
 for f in fails:
     print("FAIL:", f)

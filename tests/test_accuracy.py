@@ -63,9 +63,9 @@ def _mean_recall(approx_rows, exact: dict[int, set[int]]) -> float:
 
 def test_lsh_recall_floor_and_tuning_direction(spark, ann_fixture):
     """SRP-LSH at bits=4/tables=16 holds mean recall@10 >= 0.75 on the
-    adversarial random fixture (measured 0.9), and adding tables must
-    not hurt recall vs the 8-table config (the multi-probe knob works
-    in the documented direction)."""
+    adversarial random fixture (measured 0.80; 0.54 at 8 tables), and
+    adding tables must not hurt recall vs the 8-table config (the
+    multi-probe knob works in the documented direction)."""
     from artemia_airflow_spark.operators.similarity import lsh_topk
 
     corpus, probes, exact = ann_fixture
@@ -220,6 +220,43 @@ def test_lsh_candidate_pair_count_pinned(spark):
         .count()
     )
     assert n_pairs == 28, f"LSH candidate set changed: {n_pairs} pairs (was 28)"
+
+
+def test_dedup_clusters_star_edges_give_clique_labels(spark):
+    """``dedup_clusters`` builds bucket-star edges (bucket min -> member).
+    At sf0.01 its cluster ids equal the component-min labels of the
+    clique edges (every same-bucket pair), built here with the band
+    self-join; documents on no edge are their own cluster."""
+    from artemia_airflow_spark.operators.dedup import (
+        connected_components,
+        dedup_clusters,
+        minhash_lsh_candidates,
+        minhash_signatures,
+    )
+    from tests.conftest import SF_ORACLE
+
+    df = scan(spark, SF_ORACLE, "documents")
+    cand = minhash_lsh_candidates(
+        minhash_signatures(df, "text", num_hashes=64), "doc_id",
+        num_hashes=64, bands=8,
+    )
+    a, b = cand.alias("a"), cand.alias("b")
+    clique = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
+        .distinct()
+    )
+    want = {r.node: r.label for r in connected_components(clique).collect()}
+    got = {r.doc_id: r.cluster_id for r in dedup_clusters(df, "text", "doc_id").collect()}
+    assert len(want) > len(set(want.values())), "no multi-document cluster"
+    assert {n: got[n] for n in want} == want
+    assert all(c == n for n, c in got.items() if n not in want)
+    assert len(got) == df.count()
 
 
 def test_bloom_fpp_tracks_theory(spark):

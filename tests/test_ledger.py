@@ -131,31 +131,6 @@ def test_zero_stage_run_does_not_poison_ledger(spark, root):
     assert led.read(spark).count() == 1
 
 
-def test_tws_fallback_warns(spark):
-    """ADVICE r5: the silent protobuf fallback in running_user_stats_tws
-    is no longer silent — callers see a RuntimeWarning naming the
-    downgrade (state-v2 TTL/timers inactive).  Only meaningful where
-    protobuf is absent; skipped otherwise (the real TWS path warns
-    nothing)."""
-    import warnings
-
-    import pytest
-
-    from artemia_airflow_spark.streaming import stateful2
-
-    if stateful2.HAS_PROTOBUF:
-        pytest.skip("protobuf present: no fallback to warn about")
-    ev = spark.createDataFrame([(1, 1.0)], "user_id long, value double")
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        stateful2.running_user_stats_tws(ev)
-    assert any(
-        issubclass(w.category, RuntimeWarning)
-        and "applyInPandasWithState" in str(w.message)
-        for w in caught
-    )
-
-
 def test_resume_skips_recorded_successes(spark, root):
     """Airflow-parity 'clear failed and re-run': the flaky stage fails
     once, the rerun resumes from the recorded run — upstream executes

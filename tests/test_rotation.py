@@ -1,7 +1,7 @@
 """Rotation-derivation tests (VERDICT r16 item 4): the driver-check
 window is derived from CORRECTNESS_r*.json history — NEW_FACES first,
-then oldest-attested-first — so the hand-rolled PRIORITY can never
-again let stale rows roll over."""
+then oldest-attested-first — so no hand-rolled list can ever again
+let stale rows roll over."""
 from __future__ import annotations
 
 import json
@@ -60,24 +60,22 @@ def test_derive_priority_window_never_truncates_new_faces(tmp_path, monkeypatch)
 
 
 def test_derive_priority_falls_back_without_history(tmp_path, monkeypatch):
-    monkeypatch.setattr(
-        R, "QUERIES", {n: (lambda s, d: None) for n in R.PRIORITY[:5]}
-    )
+    """No history: every query is unattested, so the window is
+    registration order, capped at the window width."""
+    monkeypatch.setattr(R, "QUERIES", {n: (lambda s, d: None) for n in "edcba"})
     monkeypatch.setattr(R, "NEW_FACES", [])
-    got = R.derive_priority(history_dir=tmp_path)
-    assert got == R.PRIORITY[:5]
+    assert R.derive_priority(window=4, history_dir=tmp_path) == list("edcb")
 
 
 def test_fallback_leads_with_new_faces(tmp_path, monkeypatch):
     """No-history fallback must still front the NEW_FACES (r17 review:
     omitting them there recreated the never-attested-face gap in the
-    installed-package case the fallback exists for)."""
-    names = {n: (lambda s, d: None) for n in R.PRIORITY[:3]}
-    names["q_new_thing"] = lambda s, d: None
-    monkeypatch.setattr(R, "QUERIES", names)
-    monkeypatch.setattr(R, "NEW_FACES", ["q_new_thing"])
-    got = R.derive_priority(history_dir=tmp_path)
-    assert got == ["q_new_thing"] + R.PRIORITY[:3]
+    installed-package case the fallback exists for), then registration
+    order; an unregistered NEW_FACES name is skipped."""
+    monkeypatch.setattr(R, "QUERIES", {n: (lambda s, d: None) for n in "abcd"})
+    monkeypatch.setattr(R, "NEW_FACES", ["c", "q_not_registered"])
+    got = R.derive_priority(window=3, history_dir=tmp_path)
+    assert got == ["c", "a", "b"]
 
 
 def test_new_faces_self_retire_once_attested(tmp_path, monkeypatch):

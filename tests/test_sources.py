@@ -156,88 +156,3 @@ def test_stateful_running_stats_converges_to_batch(spark):
             assert math.isclose(gs, s, rel_tol=1e-9)
     finally:
         shutil.rmtree(src, ignore_errors=True)
-
-
-def test_transform_with_state_converges_to_batch(spark):
-    """State-v2 surface (``running_user_stats_tws``) converges to the
-    batch aggregate on whatever path ships in this environment.
-
-    Path-coverage marker (ADVICE r5): when protobuf is ABSENT the
-    operator silently runs its applyInPandasWithState fallback, so a
-    green here does NOT cover the transformWithState code — the
-    ``HAS_PROTOBUF`` skip below makes that explicit instead of letting
-    the fallback masquerade as state-v2 coverage.  The fallback path
-    itself is covered by test_streaming's applyInPandasWithState
-    tests; when protobuf IS importable this test runs the REAL
-    transformWithStateInPandas runner (RocksDB provider) and pins
-    equality with the batch aggregate."""
-    import pytest
-
-    from artemia_airflow_spark.streaming.stateful2 import (
-        HAS_PROTOBUF,
-        ROCKSDB_PROVIDER,
-        running_user_stats_tws,
-    )
-
-    if not HAS_PROTOBUF:
-        pytest.skip(
-            "google.protobuf missing: running_user_stats_tws would fall "
-            "back to applyInPandasWithState (already covered elsewhere) — "
-            "the transformWithState path is NOT exercised in this env"
-        )
-
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        old = spark.conf.get(conf_key)
-    except Exception:
-        old = None
-    spark.conf.set(conf_key, ROCKSDB_PROVIDER)
-    ev = scan(spark, SF_SMOKE, "events").select("user_id", "value", "ts").orderBy("ts")
-    src = tempfile.mkdtemp(prefix="aas_state2_")
-    try:
-        pdf = ev.toPandas()
-        chunk = len(pdf) // 3 + 1
-        for i in range(3):
-            part = pdf.iloc[i * chunk : (i + 1) * chunk]
-            if len(part):
-                spark.createDataFrame(part, schema=ev.schema).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(src, f"chunk={i}"))
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src + "/chunk=*")
-        )
-        q = (
-            running_user_stats_tws(stream)
-            .writeStream.format("memory")
-            .queryName("t_state2")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-        final = {}
-        for r in spark.table("t_state2").collect():
-            if r.user_id not in final or r.n_events > final[r.user_id][0]:
-                final[r.user_id] = (r.n_events, r.sum_value, r.max_value)
-        want = {
-            r.user_id: (r.n_events, r.sum_value, r.max_value)
-            for r in running_user_stats_batch(
-                scan(spark, SF_SMOKE, "events").select("user_id", "value")
-            ).collect()
-        }
-        assert final.keys() == want.keys()
-        for uid, (n, s, m) in want.items():
-            gn, gs, gm = final[uid]
-            # incremental per-batch folds sum in a different order than
-            # the batch aggregate -> ulp-level float drift on the sum
-            assert gn == n and gm == m
-            assert math.isclose(gs, s, rel_tol=1e-9)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        if old is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, old)
