@@ -97,6 +97,14 @@ def spread_for_compute(df, min_partitions: int | None = None):
     return df.repartition(target)
 
 
+# The engine's bounded-collect budget for driver-side graph tiers
+# (``dedup.connected_components``' union-find, ``behavior.pagerank_types``):
+# <= ~32 MB of int64 pairs collected — the same budget as the Bloom
+# bitmap tier.  LSH dedup graphs at corpus scale blow far past this, so
+# production connected-components runs take the distributed loop.
+DRIVER_TIER_MAX_EDGES = 2_000_000
+
+
 # ``SparkContext.setCheckpointDir`` is context-GLOBAL: two threads
 # re-pointing it concurrently can land one caller's checkpoint blocks
 # in the OTHER caller's scratch directory — which that caller then
@@ -104,6 +112,14 @@ def spread_for_compute(df, min_partitions: int | None = None):
 # DataFrame still references (ADVICE r10).  Every reliable checkpoint
 # holds this lock across set-dir + materialize.
 _RELIABLE_CHECKPOINT_LOCK = threading.Lock()
+
+# The source frame of the latest lazy cut of each name.  A lazy cut's
+# deferred result stage reports SQL metrics into accumulators of the
+# source's physical plan; once Python drops the source, the JVM can
+# collect that plan while the stage still runs, and the DAGScheduler
+# logs "Failed to update accumulator ... (Unknown class)".  Cut names
+# are literal and unique, so this holds at most one frame per site.
+_LAZY_SOURCES: dict = {}
 
 
 def cut(df, name: str, *, eager: bool = True, checkpoint_dir: str | None = None):
@@ -153,6 +169,8 @@ def cut(df, name: str, *, eager: bool = True, checkpoint_dir: str | None = None)
     sc.setJobDescription(f"cut {name}")
     try:
         if checkpoint_dir is None:
+            if not eager:
+                _LAZY_SOURCES[name] = df
             return df.localCheckpoint(eager=eager)
         # unpersisting a cache the CALLER established would evict its
         # blocks and force full recomputes downstream (r10 review)

@@ -23,11 +23,16 @@ microseconds in both engines, no floating-point epoch math.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from artemia_airflow_spark.catalog import scan
-from artemia_airflow_spark.functions.core import cut, guarded_e6_ratio
+from artemia_airflow_spark.functions.core import (
+    DRIVER_TIER_MAX_EDGES,
+    cut,
+    guarded_e6_ratio,
+)
 from artemia_airflow_spark.plans.registry import declared
 from artemia_airflow_spark.session import ensure_engine_conf
 
@@ -453,79 +458,69 @@ def pagerank_types(
     iteration is ``pr' = (0.15e9 DIV n) + (85 * (inc + dm DIV n))
     DIV 100`` with ``inc`` an order-free integer sum — no float adds,
     so parallel aggregation order cannot perturb the result (the
-    corr-matrix sufficient-statistics precedent).
+    corr-matrix sufficient-statistics precedent).  A NULL type is a
+    node that matches no edge endpoint: it receives no transition
+    mass and counts as dangling.
 
-    Scale shape: the corpus is touched exactly twice — the behavioral
-    family's single user_id exchange for lag pairs (map-side-combined
-    into a |types|^2 edge relation) and one distinct-type aggregate
-    (carries <= partitions x |types| rows) — then ``cut``
-    pins both tiny relations so the iterations never rescan the fact
-    table; every per-iteration join is node- or edge-count-sized and
-    broadcasts.  The bounded-vocabulary contract (|types|^2 edges fit
-    one executor) is what makes type-level PageRank safe at 100 TB;
-    an unbounded-node-id graph belongs to the CC machinery instead.
+    Scale shape: the corpus is touched once, distributed — the
+    behavioral family's single user_id exchange for lag pairs,
+    map-side-combined into one ``(src, dst)`` count whose ``src IS
+    NULL`` rows (each user's first event) keep every type as some
+    row's ``dst``, so the same relation carries the node set; the
+    e6 probabilities are computed there, under the JVM's headroom
+    guard.  That relation is collected under the hard
+    ``DRIVER_TIER_MAX_EDGES`` cap and the iterations run on the
+    driver in Python integers.  The bounded-vocabulary contract
+    (|types|^2 edges fit the driver) is what makes type-level
+    PageRank safe at 100 TB; a graph past the cap raises, since an
+    unbounded-node-id graph belongs to the connected-components
+    machinery instead.
 
     Overflow headroom under ANSI mode: cnt*1e6 stays under 2^63 up to
     ~9.2e12 transitions per (src,dst) pair — beyond any per-pair count
     at 100 TB; pr*prob_e6 <= 1e9 * 1e6 = 1e15.
     """
     w = Window.partitionBy(user_col).orderBy(ts_col, order_tiebreak)
-    pairs = events.select(
+    counts = events.select(
         F.lag(F.col(type_col)).over(w).alias("src"),
         F.col(type_col).alias("dst"),
-    ).filter(F.col("src").isNotNull())
-    edges = pairs.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("cnt"))
+    ).groupBy("src", "dst").agg(F.count(F.lit(1)).alias("cnt"))
     out_total = F.sum("cnt").over(Window.partitionBy("src"))
-    # kept, sf0.1 cut -> none: 2.30 -> 12.95 MB read, 2.27 -> 12.92 MB shuffled
-    eprob = cut(
-        edges.select(
-            "src", "dst", "cnt", out_total.alias("__out"),
-        ).select(
-            "src", "dst",
-            guarded_e6_ratio("cnt", "__out", op="transition_probs")
-            .alias("prob_e6"),
-        ),
-        "behavior.pagerank_types.eprob",
-    )
-    # kept: tests/test_plans.py::test_pagerank_iterations_never_rescan_the_fact_table pins it
-    nodes = cut(
-        events.select(F.col(type_col).alias("node")).distinct(),
-        "behavior.pagerank_types.nodes",
-    )
-    srcs = eprob.select("src").distinct()
-    n_row = nodes.agg(F.count(F.lit(1)).alias("__n"))
-    pr = (
-        nodes.crossJoin(F.broadcast(n_row))
-        .selectExpr("node", "CAST(1000000000 AS BIGINT) DIV __n AS pr_e9")
-    )
+    rows = counts.select("src", "dst", "cnt", out_total.alias("__out")).select(
+        "src", "dst",
+        guarded_e6_ratio("cnt", "__out", op="transition_probs").alias("prob_e6"),
+    ).limit(DRIVER_TIER_MAX_EDGES + 1).collect()
+    if len(rows) > DRIVER_TIER_MAX_EDGES:
+        raise ValueError(
+            "pagerank_types: the type transition graph exceeds "
+            f"{DRIVER_TIER_MAX_EDGES} edges, breaking the bounded-vocabulary "
+            "contract (|types|^2 edges fit the driver) — rank an "
+            "unbounded-node-id graph with the connected-components machinery"
+        )
+    # NULL endpoints match no node: a NULL dst's mass leaves the graph,
+    # and the NULL node is no src, so it is dangling (the SQL join rule)
+    nodes = {r.dst for r in rows}
+    srcs = {r.src for r in rows if r.src is not None}
+    edges = [(r.src, r.dst, r.prob_e6) for r in rows
+             if r.src is not None and r.dst is not None]
+    n = len(nodes)  # no events: no node, so no division runs below
+    pr = {v: 1_000_000_000 // n for v in nodes}
     for _ in range(iters):
-        pr = cut(pr, "behavior.pagerank_types.pr")
-        inc = (
-            eprob.join(F.broadcast(pr), eprob.src == pr.node)
-            .selectExpr("dst", "(pr_e9 * prob_e6) DIV 1000000 AS __c")
-            .groupBy("dst")
-            .agg(F.sum("__c").alias("__inc"))
-        )
-        dang = (
-            pr.join(srcs, pr.node == srcs.src, "left_anti")
-            .agg(F.coalesce(F.sum("pr_e9"), F.lit(0)).alias("__dm"))
-        )
-        pr = (
-            nodes.crossJoin(F.broadcast(n_row))
-            .crossJoin(F.broadcast(dang))
-            .join(F.broadcast(inc), nodes.node == inc.dst, "left")
-            .selectExpr(
-                "node",
-                "(150000000 DIV __n) + "
-                "(85 * (COALESCE(__inc, 0) + __dm DIV __n)) DIV 100 "
-                "AS pr_e9",
-            )
-        )
-    rk = Window.orderBy(F.col("pr_e9").desc(), F.col("node"))
-    return pr.select(
-        F.col("node").alias(type_col),
-        "pr_e9",
-        F.row_number().over(rk).cast("bigint").alias("rank"),
+        inc: dict = {}
+        for s, d, p in edges:
+            inc[d] = inc.get(d, 0) + pr[s] * p // 1_000_000
+        dm = sum(pr[v] for v in nodes if v not in srcs)
+        pr = {v: 150_000_000 // n + 85 * (inc.get(v, 0) + dm // n) // 100
+              for v in nodes}
+    ranked = sorted(pr, key=lambda v: (-pr[v], v is not None, v))
+    type_t = events.schema[type_col].dataType.simpleString()
+    return events.sparkSession.createDataFrame(
+        pd.DataFrame({
+            type_col: ranked,
+            "pr_e9": [pr[v] for v in ranked],
+            "rank": range(1, len(ranked) + 1),
+        }),
+        f"`{type_col}` {type_t}, pr_e9 bigint, rank bigint",
     )
 
 
@@ -798,6 +793,7 @@ def active_users(
     """
     day = F.expr(f"unix_micros({ts_col}) DIV 86400000000")
     # kept, sf0.1 cut -> none: 7.37 -> 0.90 MB read, 0.65 -> 0.89 MB shuffled
+    # 100x: 11.98 -> 14.47 s, 882 -> 275 MB read, 209 -> 274 MB shuffled
     ud = cut(
         events.select(F.col(user_col).alias("u"), day.alias("day"))
         .distinct(),

@@ -1680,6 +1680,7 @@ def curriculum_assign(
     # the algebraic proof.
     nb = _N_CURRICULUM_BINS
     # kept, sf0.1 cut -> none: 0.42 -> 0.67 MB read, 0.03 -> 0.03 MB shuffled
+    # 100x: 1.32 -> 1.57 MB read, 7.24 -> 7.85 s
     stats = cut(
         hist.agg(
             F.min("score_e6").alias("__mn"),

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from artemia_airflow_spark.catalog import scan
 from artemia_airflow_spark.functions.core import (
+    DRIVER_TIER_MAX_EDGES,
     cut,
     guarded_e6_ratio,
     process_scratch_dir,
@@ -535,14 +536,6 @@ def q_dedup_ngram(spark, sf_dir):
     d = scan(spark, sf_dir, "documents")
     return ngram_jaccard_pairs(d, "text", "doc_id", threshold=0.8)
 
-# connected_components driver tier: below this edge count the exact
-# union-find runs on the driver (<= ~32 MB of int64 pairs collected —
-# the same bounded-collect budget as the Bloom bitmap tier); above it,
-# the distributed loop.  LSH dedup graphs at corpus scale blow far past
-# this, so production runs take the loop (r17).
-_CC_DRIVER_TIER_MAX_EDGES = 2_000_000
-
-
 def _cc_driver_labels(src, dst):
     """Exact connected components over int64 numpy edge arrays:
     alternating min-scatter propagation + full pointer jumping on a
@@ -592,7 +585,7 @@ def connected_components(
     loss mid-loop (see :func:`~..functions.core.cut`).
 
     ``driver_tier`` (r17): integral-keyed, NULL-free graphs at or
-    under ``_CC_DRIVER_TIER_MAX_EDGES`` edges run an exact numpy
+    under ``DRIVER_TIER_MAX_EDGES`` edges run an exact numpy
     union-find on the driver instead of the loop — identical labels
     (test-pinned), milliseconds instead of per-round scheduling.
     Hard-capped bounded collect; ``checkpoint_dir`` callers and
@@ -614,7 +607,7 @@ def connected_components(
     if (
         driver_tier
         and checkpoint_dir is None
-        and n_edges <= _CC_DRIVER_TIER_MAX_EDGES
+        and n_edges <= DRIVER_TIER_MAX_EDGES
         # integral node ids only: the numpy kernel is int64; string or
         # other orderable key types stay on the distributed loop, which
         # handles them natively (review r17)
@@ -696,7 +689,7 @@ def connected_components(
     # matters there).  Runtime conf is session-shared — a concurrent
     # query in another thread could briefly observe the pinned values
     # (perf-only; restored in the finally).
-    small = n_edges <= _CC_DRIVER_TIER_MAX_EDGES
+    small = n_edges <= DRIVER_TIER_MAX_EDGES
     conf = spark.conf
     old_aqe = conf.get("spark.sql.adaptive.enabled")
     old_sp = conf.get("spark.sql.shuffle.partitions")

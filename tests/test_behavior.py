@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from artemia_airflow_spark.operators.behavior import (
@@ -188,6 +189,78 @@ def test_pagerank_hub_ranks_first_and_mass_conserved(spark):
     assert out["D"][0] < out["H"][0]
     # B receives nothing (no in-edges): exactly the teleport floor tier
     assert out["B"][1] == 4
+
+
+def test_pagerank_null_type_is_a_dangling_node_without_mass(spark):
+    """A NULL type is a node that matches no edge endpoint (the SQL
+    join rule): the A->NULL transition's mass leaves the graph, NULL
+    receives nothing and counts as dangling, so it ties B (no edges at
+    all) on the floor tier, and the tie ranks NULL first (Spark's
+    ascending order puts NULLs first)."""
+    from artemia_airflow_spark.operators.behavior import pagerank_types
+
+    e = _events(spark, [
+        (0, 1, "A", 1.0), (10, 1, "H", 1.0),
+        (0, 2, "A", 1.0), (10, 2, "H", 1.0),
+        (0, 3, "H", 1.0), (10, 3, "A", 1.0),
+        (0, 4, None, 1.0), (10, 4, "H", 1.0),
+        (0, 5, "A", 1.0), (10, 5, None, 1.0),
+        (0, 6, "B", 1.0),
+    ])
+    out = {r.event_type: (r.pr_e9, r.rank)
+           for r in pagerank_types(e).collect()}
+    assert out == {
+        "A": (334_800_608, 1),
+        "H": (272_747_567, 2),
+        None: (79_402_343, 3),
+        "B": (79_402_343, 4),
+    }
+
+
+def test_pagerank_empty_events_give_no_rows(spark):
+    from artemia_airflow_spark.operators.behavior import pagerank_types
+
+    out = pagerank_types(_events(spark, []))
+    assert out.columns == ["event_type", "pr_e9", "rank"]
+    assert out.collect() == []
+
+
+def test_pagerank_over_the_driver_cap_raises(spark, monkeypatch):
+    """A type graph past the bounded-collect cap breaks the
+    bounded-vocabulary contract: a named error, no distributed
+    fallback."""
+    from artemia_airflow_spark.operators import behavior
+
+    monkeypatch.setattr(behavior, "DRIVER_TIER_MAX_EDGES", 3)
+    e = _events(spark, [
+        (0, 1, "A", 1.0), (10, 1, "B", 1.0),
+        (0, 2, "B", 1.0), (10, 2, "C", 1.0),
+    ])
+    with pytest.raises(ValueError, match="bounded-vocabulary contract"):
+        behavior.pagerank_types(e)
+
+
+def test_pagerank_job_budget(spark):
+    """At sf0.01 the distributed power loop ran 40 Spark jobs (29 in
+    its cuts); one collect of the type graph leaves the lag-pair
+    exchanges, the collect and the result.  The first run warms the
+    scan-schema memo."""
+    import __spark_entry__ as entry
+
+    from conftest import SF_ORACLE
+
+    sc = spark.sparkContext
+    run = lambda: entry.queries()["q_graph_pagerank"](spark, SF_ORACLE).write.format(  # noqa: E731
+        "noop").mode("overwrite").save()
+    run()
+    group = "pagerank-jobs"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(jobs) <= 5, jobs
 
 
 def test_last_touch_attribution_hand_cases(spark):

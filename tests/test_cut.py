@@ -6,9 +6,11 @@ and the reliable tier keeps its eager-only rule."""
 from __future__ import annotations
 
 import ast
+import gc
 import pathlib
 import re
 import sys
+import weakref
 
 import pytest
 from pyspark.sql import functions as F
@@ -45,13 +47,42 @@ def test_cut_is_the_only_materialization_seam():
     ]
     assert mentions == []
 
+    sites = _cut_sites()
+    assert sites.unnamed == ["operators/dedup.py:_stage"]
+    assert sites.names, "no cut call sites found"
+    assert sorted({n for n in sites.names if sites.names.count(n) > 1}) == []
+
+
+def _cut_sites() -> _CutSites:
     sites = _CutSites()
     for f in sorted(PKG.rglob("*.py")):
         sites.where = f.relative_to(PKG)
         sites.visit(ast.parse(f.read_text()))
-    assert sites.unnamed == ["operators/dedup.py:_stage"]
-    assert sites.names, "no cut call sites found"
-    assert sorted({n for n in sites.names if sites.names.count(n) > 1}) == []
+    return sites
+
+
+def _ledger_rows():
+    """(names, deleted) per row of SCALE.md's "Lineage cuts" tables:
+    the backticked names of the row's first cell, and whether its
+    decision cell marks the cut **deleted**."""
+    text = (REPO / "SCALE.md").read_text()
+    section = text.split("\n## Lineage cuts", 1)[1].split("\n## ", 1)[0]
+    for line in section.splitlines():
+        if line.startswith("| `"):
+            cells = line.split("|")
+            yield re.findall(r"`([^`]+)`", cells[1]), "**deleted**" in cells[3]
+
+
+def test_every_cut_has_a_ledger_row_and_every_live_row_a_cut():
+    """SCALE.md "Lineage cuts" is the ledger of the engine's cuts: each
+    literal ``cut`` name under the package has a row not marked
+    deleted, and each such row names a cut that still exists.
+    ``dedup.stage_fn`` stands for the stage stores it cuts under each
+    stage's name (the one call site without a literal)."""
+    live = set(_cut_sites().names) | {"dedup.stage_fn"}
+    kept = {n for names, deleted in _ledger_rows() if not deleted for n in names}
+    assert sorted(live - kept) == [], "cuts without a ledger row"
+    assert sorted(kept - live) == [], "ledger rows of cuts that are gone"
 
 
 class _CutSites(ast.NodeVisitor):
@@ -129,6 +160,20 @@ def test_lazy_cut_runs_its_stage_jobs_under_its_name(spark):
         assert [(r.d, r["count"]) for r in out.collect()] == [("cut test.cut.lazy", 4)]
     finally:
         sc.setLocalProperty(DESC, None)
+
+
+def test_lazy_cut_keeps_its_source_frame_alive(spark):
+    """The deferred result stage of a lazy cut reports SQL metrics into
+    accumulators of the source frame's plan; if the source could be
+    collected first, Spark logs "Failed to update accumulator".  So the
+    cut holds the source after the caller drops it."""
+    src = spark.range(8).groupBy((F.col("id") % 2).alias("k")).count()
+    out = cut(src, "test.cut.keep_alive", eager=False)
+    ref = weakref.ref(src)
+    del src
+    gc.collect()
+    assert ref() is not None
+    assert sorted(r["count"] for r in out.collect()) == [4, 4]
 
 
 def test_reliable_cut_warns_on_lazy_and_still_writes_under_its_dir(spark, tmp_path):
